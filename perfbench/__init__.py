@@ -1,2 +1,2 @@
-"""The repository benchmark: four workloads over the engine's public
+"""The repository benchmark: two workloads over the engine's public
 surface, run by ``python3 perfbench/run.py``."""

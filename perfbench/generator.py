@@ -2,19 +2,18 @@
 writes messages into the rapid's source directory on a fixed schedule,
 whether or not the rapid keeps up.
 
-Message ``j`` is due at ``start + j / rate`` and carries that time as
-``sched_ts``. Every ``tick`` seconds the generator writes the messages
-that fell due during the tick as one file: first under a temporary name
-outside the source directory, then renamed into it, so the file source
-never lists a half-written file. A share of the messages are ``@behov``
-needs; the rest replay the staged events rapid in order.
+Every message is an ``@behov`` need of one of three types. Need ``j`` is
+due at ``start + j / rate`` and carries that time as ``sched_ts``. Every
+``tick`` seconds the generator writes the needs that fell due during the
+tick as one file: first under a temporary name outside the source
+directory, then renamed into it, so the file source never lists a
+half-written file.
 
-    python3 perfbench/generator.py --events DIR --out DIR --tmp DIR \
-        --manifest FILE --rate 100 --tick 0.25 --start EPOCH --seconds 14 --seed 1
+    python3 perfbench/generator.py --out DIR --tmp DIR --manifest FILE \
+        --rate 500 --tick 0.25 --start EPOCH --seconds 19 --seed 1
 
-On exit it writes the manifest: the number of events emitted, each need
-as (id, type, sched_ts), and how late each file landed after its due
-time.
+On exit it writes the manifest: each need as (id, type, sched_ts), and
+how late each file landed after its due time.
 """
 
 from __future__ import annotations
@@ -28,7 +27,6 @@ import time
 from datetime import datetime, timezone
 
 NEED_TYPES = ("identity", "address", "income")
-NEED_SHARE = 0.3
 
 
 def schedule(rate: float, tick: float, start: float, seconds: float) -> list[tuple[float, int, int]]:
@@ -59,23 +57,8 @@ def need_message(seed: int, j: int, need: str, sched_ts: float, user: int) -> st
     )
 
 
-def stamp_event(line: str, sched_ts: float) -> str:
-    """Add ``sched_ts`` to one serialized event object."""
-    return f'{line[:-1]},"sched_ts":{sched_ts!r}}}'
-
-
-def read_events(events_dir: str) -> list[str]:
-    lines = []
-    for name in sorted(os.listdir(events_dir)):
-        if name.startswith("part-"):
-            with open(os.path.join(events_dir, name), encoding="utf-8") as f:
-                lines.extend(line.rstrip("\n") for line in f if line.strip())
-    return lines
-
-
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description="open-loop message generator")
-    p.add_argument("--events", required=True)
     p.add_argument("--out", required=True)
     p.add_argument("--tmp", required=True)
     p.add_argument("--manifest", required=True)
@@ -86,22 +69,16 @@ def main(argv=None) -> int:
     p.add_argument("--seed", type=int, required=True)
     args = p.parse_args(argv)
 
-    events = read_events(args.events)
     rng = random.Random(args.seed)
-    next_event = 0
     needs: list[list] = []
     lateness: list[float] = []
     for due, lo, hi in schedule(args.rate, args.tick, args.start, args.seconds):
         lines = []
         for j in range(lo, hi):
             sched_ts = args.start + j / args.rate
-            if rng.random() < NEED_SHARE or next_event >= len(events):
-                need = rng.choice(NEED_TYPES)
-                lines.append(need_message(args.seed, j, need, sched_ts, rng.randrange(150)))
-                needs.append([f"need-{args.seed}-{j}", need, sched_ts])
-            else:
-                lines.append(stamp_event(events[next_event], sched_ts))
-                next_event += 1
+            need = rng.choice(NEED_TYPES)
+            lines.append(need_message(args.seed, j, need, sched_ts, rng.randrange(150)))
+            needs.append([f"need-{args.seed}-{j}", need, sched_ts])
         wait = due - time.time()
         if wait > 0:
             time.sleep(wait)
@@ -113,7 +90,7 @@ def main(argv=None) -> int:
         lateness.append(time.time() - due)
     tmp = os.path.join(args.tmp, "manifest.json")
     with open(tmp, "w") as f:
-        json.dump({"events": next_event, "needs": needs, "lateness": lateness}, f)
+        json.dump({"needs": needs, "lateness": lateness}, f)
     os.rename(tmp, args.manifest)
     return 0
 

@@ -87,7 +87,9 @@ def build(run: Run):
 def set_up(run: Run, stage, tracer) -> list[float]:
     """Set up ``SETUP_REPS`` times (session start + warm-up job + input
     staging into a fresh directory) and return each set-up's seconds.
-    The last set-up's session and inputs are the ones the run measures."""
+    Only the first set-up launches the JVM; the later ones restart the
+    session in it. The last set-up's session and inputs are the ones the
+    run measures."""
     totals = []
     for rep in range(SETUP_REPS):
         t0 = time.perf_counter()

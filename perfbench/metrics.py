@@ -4,14 +4,13 @@ lists the same names (a unit test keeps the two in step)."""
 from __future__ import annotations
 
 #: (name, unit) of the end-to-end metrics, printed with ``--trace 0``.
-#: ``latency_*`` time the workload's unit of work: for rapid_open_loop a
-#: message's wait from its scheduled creation to its reply's commit, for
-#: er_epochs the whole epoch sequence. The tail is p99 when at least ten
-#: samples lie beyond it, else the maximum.
+#: ``setup_s`` is the cold set-up: JVM launch, session start, warm-up job
+#: and input staging. ``latency_p50_s`` times the workload's unit of work: for
+#: behov_open_loop a need's wait from its scheduled creation to its
+#: reply's commit, for er_epochs the whole epoch sequence (one sample).
 END_TO_END = (
     ("setup_s", "s"),
     ("latency_p50_s", "s"),
-    ("latency_tail_s", "s"),
 )
 
 #: (name, unit) of the per-layer metrics, printed with ``--trace 1``.

@@ -62,15 +62,3 @@ def connect(data_dir: str, tables: list[str]) -> duckdb.DuckDBPyConnection:
         path = os.path.join(data_dir, f"{t}.parquet")
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
-
-
-def parquet_rows(con, path: str, select: str) -> list[tuple]:
-    """Rows of ``select`` over every parquet file under ``path`` (empty
-    when the engine wrote nothing there)."""
-    if not any(
-        f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-    ):
-        return []
-    return con.execute(
-        f"SELECT {select} FROM read_parquet('{path}/**/*.parquet')"
-    ).fetchall()

@@ -2,7 +2,7 @@
 report each end-to-end metric's median and quartile spread
 ((Q3 - Q1) / median) next to the bound BENCHMARK.json fixes for it.
 
-    python3 perfbench/spread.py --workloads rapid_open_loop er_epochs --seeds 1 2 3 4 5
+    python3 perfbench/spread.py --workloads behov_open_loop er_epochs --seeds 1 2 3 4 5
 
 Run from the root of a checkout. Runs are sequential, so they do not
 compete with each other for the machine.

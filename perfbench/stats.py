@@ -6,9 +6,6 @@ from __future__ import annotations
 import math
 import statistics
 
-#: candidate tail percentiles, highest first
-TAIL_QUANTILES = (99.9, 99.0, 90.0)
-
 
 def percentile(values: list[float], q: float) -> float:
     """Linear-interpolated percentile (numpy's default method) of a
@@ -24,24 +21,12 @@ def percentile(values: list[float], q: float) -> float:
     return xs[lo] + (xs[hi] - xs[lo]) * (pos - lo)
 
 
-def tail_quantile(n: int) -> float | None:
-    """The highest tail percentile with at least ten samples beyond it,
-    or None when the sample is too small for any of them."""
-    for q in TAIL_QUANTILES:
-        if n * (100.0 - q) / 100.0 >= 10 - 1e-9:  # 100 - 99.9 is inexact
-            return q
-    return None
-
-
 def summarize(values: list[float]) -> dict:
-    """Median plus the highest supported tail. Samples too few for any
-    tail percentile report their maximum as the tail, labelled ``max``."""
-    q = tail_quantile(len(values))
+    """Sample count, median and 90th percentile."""
     return {
         "n": len(values),
         "p50": percentile(values, 50.0),
-        "tail_label": f"p{q:g}" if q is not None else "max",
-        "tail": percentile(values, q) if q is not None else max(values),
+        "p90": percentile(values, 90.0),
     }
 
 

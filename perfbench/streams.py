@@ -7,8 +7,6 @@ from __future__ import annotations
 import statistics
 import time
 
-from pyspark.sql import functions as F
-
 #: Spark's per-trigger phases (StreamingQueryProgress.durationMs) the
 #: benchmark reports, by the per-layer metric name they feed
 PROGRESS_PHASES = {
@@ -21,30 +19,28 @@ PROGRESS_PHASES = {
 
 
 class Dispatch:
-    """foreachBatch callable around one rapid. Sinks made by :meth:`sink`
-    append each batch to parquet with a ``batch_id`` column and note when
-    the write committed."""
+    """foreachBatch callable around one rapid. Its sink, :meth:`sink`,
+    stands in for the topic the rapid publishes to: it collects each
+    batch's replies into ``replies`` as (batch id, value) and notes when
+    they committed."""
 
     def __init__(self, rapid, tracer, jobs):
         self.rapid = rapid
         self.tracer = tracer
         self.jobs = jobs
         self.batches: list[dict] = []
+        self.replies: list[tuple[int, str]] = []
         self._batch: dict | None = None
 
-    def sink(self, path: str):
-        def write(df):
-            with self.tracer.span("runtime.sink_write") as s:
-                df.withColumn("batch_id", F.lit(self._batch["id"])).write.mode(
-                    "append"
-                ).parquet(path)
-            self._batch["sink_s"] += s["seconds"]
-            self._batch["commit_ts"] = time.time()
-
-        return write
+    def sink(self, df) -> None:
+        with self.tracer.span("runtime.sink_write") as s:
+            values = [row.value for row in df.select("value").collect()]
+        self.replies.extend((self._batch["id"], v) for v in values)
+        self._batch["sink_s"] += s["seconds"]
+        self._batch["commit_ts"] = time.time()
 
     def __call__(self, df, batch_id: int) -> None:
-        self._batch = {"id": batch_id, "sink_s": 0.0, "commit_ts": None}
+        self._batch = {"id": batch_id, "start_ts": time.time(), "sink_s": 0.0, "commit_ts": None}
         with self.jobs.group("batch") as counts, self.tracer.span(
             "runtime.process_batch"
         ) as s:

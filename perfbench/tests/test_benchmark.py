@@ -16,7 +16,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from perfbench import data, generator, metrics, oracle, stats
-from perfbench.workloads import rapid
+from perfbench.workloads import behov
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -39,19 +39,9 @@ def test_percentile_small_samples():
         stats.percentile([1.0], 101)
 
 
-@pytest.mark.parametrize(
-    "n, q", [(5, None), (99, None), (100, 90.0), (999, 90.0), (1000, 99.0), (10_000, 99.9)]
-)
-def test_tail_needs_ten_samples_beyond(n, q):
-    assert stats.tail_quantile(n) == q
-
-
-def test_summarize_labels_its_tail():
-    few = stats.summarize([3.0, 1.0, 2.0])
-    assert few == {"n": 3, "p50": 2.0, "tail_label": "max", "tail": 3.0}
-    many = stats.summarize([float(i) for i in range(1000)])
-    assert many["tail_label"] == "p99"
-    assert many["tail"] == pytest.approx(989.01)
+def test_summarize_reports_count_median_and_p90():
+    assert stats.summarize([3.0, 1.0, 2.0]) == {"n": 3, "p50": 2.0, "p90": pytest.approx(2.8)}
+    assert stats.summarize([7.5]) == {"n": 1, "p50": 7.5, "p90": 7.5}
 
 
 def test_quartile_spread_uses_statistics_quantiles():
@@ -89,11 +79,6 @@ def test_frames_match_ignores_row_and_column_order():
     assert oracle.frames_match(a, c, "t")
 
 
-def test_parquet_rows_on_missing_output(tmp_path):
-    con = oracle.connect(str(tmp_path), [])
-    assert oracle.parquet_rows(con, str(tmp_path / "none"), "*") == []
-
-
 # -- open-loop generator ------------------------------------------------------
 
 
@@ -116,17 +101,12 @@ def test_schedule_assigns_each_message_to_the_tick_it_is_due_in():
 def test_generator_run_writes_on_schedule(tmp_path):
     import time
 
-    events_dir = tmp_path / "events"
-    events_dir.mkdir()
-    (events_dir / "part-00000.txt").write_text(
-        "\n".join(json.dumps({"event_id": i, "@event_name": "view"}) for i in range(40)) + "\n"
-    )
     out, tmp = tmp_path / "out", tmp_path / "tmp"
     out.mkdir()
     tmp.mkdir()
     start = time.time() + 0.2
     generator.main([
-        "--events", str(events_dir), "--out", str(out), "--tmp", str(tmp),
+        "--out", str(out), "--tmp", str(tmp),
         "--manifest", str(tmp_path / "manifest.json"), "--rate", "100", "--tick", "0.1",
         "--start", repr(start), "--seconds", "0.5", "--seed", "4",
     ])
@@ -134,27 +114,22 @@ def test_generator_run_writes_on_schedule(tmp_path):
     files = sorted(out.iterdir())
     assert len(files) == 5 and not list(tmp.iterdir())
     lines = [json.loads(l) for f in files for l in f.read_text().splitlines()]
-    assert len(lines) == 50 == manifest["events"] + len(manifest["needs"])
+    assert len(lines) == 50 == len(manifest["needs"])
     assert [m["sched_ts"] for m in lines] == pytest.approx([start + j / 100 for j in range(50)])
-    assert [m["event_id"] for m in lines if "event_id" in m] == list(range(manifest["events"]))
-    needs = [m for m in lines if m["@event_name"] == "behov"]
-    assert [[m["@id"], m["@behov"][0], m["sched_ts"]] for m in needs] == manifest["needs"]
+    assert {m["@event_name"] for m in lines} == {"behov"}
+    assert [[m["@id"], m["@behov"][0], m["sched_ts"]] for m in lines] == manifest["needs"]
+    assert {m["@behov"][0] for m in lines} == set(generator.NEED_TYPES)
     assert len(manifest["lateness"]) == 5 and min(manifest["lateness"]) >= 0
 
 
-def test_stamp_event_keeps_valid_json():
-    line = json.dumps({"a": 1, "b": {"c": [1, 2]}})
-    assert json.loads(generator.stamp_event(line, 12.5)) == {"a": 1, "b": {"c": [1, 2]}, "sched_ts": 12.5}
-
-
-# -- rapid workload wiring and checks -----------------------------------------
+# -- behov workload wiring and checks -----------------------------------------
 
 
 def test_packet_handlers_take_no_metadata_slot():
     from rapids_and_rivers_spark.streaming.runtime import _wants_metadata
 
     for need in generator.NEED_TYPES:
-        assert not _wants_metadata(rapid.make_solver(need))
+        assert not _wants_metadata(behov.make_solver(need))
 
 
 def test_solver_answers_its_need():
@@ -162,51 +137,30 @@ def test_solver_answers_its_need():
 
     msg = generator.need_message(1, 0, "income", 5.0, 42)
     packet = Packet(msg)
-    packet.declare("@behov", "@behovId", "user_id", rapid.SOLUTION)
+    packet.declare("@behov", "@behovId", "user_id", behov.SOLUTION)
     published = []
 
     class Ctx:
         def publish(self, message, key=None):
             published.append(message)
 
-    rapid.make_solver("income")(packet, Ctx())
+    behov.make_solver("income")(packet, Ctx())
     assert len(published) == 1
-    assert json.loads(published[0].to_json())[rapid.SOLUTION] == {"income": {"user": 42, "ok": True}}
+    assert json.loads(published[0].to_json())[behov.SOLUTION] == {"income": {"user": 42, "ok": True}}
 
 
 def test_check_needs_flags_missing_duplicate_and_wrong_replies():
     needs = [["n1", "income", 1.0], ["n2", "address", 2.0], ["n3", "identity", 3.0]]
     replies = [
-        {"@forårsaket_av": {"id": "n1"}, rapid.SOLUTION: {"income": {}}},
-        {"@forårsaket_av": {"id": "n2"}, rapid.SOLUTION: {"income": {}}},
-        {"@forårsaket_av": {"id": "n3"}, rapid.SOLUTION: {"identity": {}}},
-        {"@forårsaket_av": {"id": "n3"}, rapid.SOLUTION: {"identity": {}}},
+        {"@forårsaket_av": {"id": "n1"}, behov.SOLUTION: {"income": {}}},
+        {"@forårsaket_av": {"id": "n2"}, behov.SOLUTION: {"income": {}}},
+        {"@forårsaket_av": {"id": "n3"}, behov.SOLUTION: {"identity": {}}},
+        {"@forårsaket_av": {"id": "n3"}, behov.SOLUTION: {"identity": {}}},
     ]
-    failed, problems = rapid.check_needs(needs, replies)
+    failed, problems = behov.check_needs(needs, replies)
     assert failed == 2
     assert problems == ["n2: reply does not solve address", "n3: 2 replies"]
-    assert rapid.check_needs(needs[:1], replies[:1]) == (0, [])
-
-
-def test_expected_need_dlq_counts():
-    needs = [["n1", "income", 1.0]]
-    rows = rapid.expected_need_dlq(needs, [7, 8])
-    n_rivers = rapid.N_EVENT_RIVERS + len(generator.NEED_TYPES)
-    assert len(rows) == (n_rivers - 1) + 2 * len(generator.NEED_TYPES)
-    assert ("need_income", "precondition_failed", "n1") not in rows
-    assert ("need_income", "precondition_failed", "7") in rows
-
-
-def test_expected_event_sql_partitions_every_event(tmp_path):
-    """Per event river, each emitted event is either a reply or a DLQ row."""
-    data.write_tables(str(tmp_path), 5, {"events": 300})
-    con = oracle.connect(str(tmp_path), ["events"])
-    con.execute("CREATE VIEW emitted_events AS SELECT * FROM events WHERE event_id < 250")
-    replies_sql, dlq_sql = rapid.expected_event_sql()
-    replies = con.execute(replies_sql).fetchall()
-    dlq = con.execute(dlq_sql).fetchall()
-    assert len(replies) + len(dlq) == 250 * rapid.N_EVENT_RIVERS
-    assert {v for _, v, _ in dlq} == {"precondition_failed", "validation_failed"}
+    assert behov.check_needs(needs[:1], replies[:1]) == (0, [])
 
 
 # -- inputs and metric names --------------------------------------------------
@@ -235,12 +189,9 @@ def test_benchmark_json_lists_the_printed_metrics():
     assert [w["name"] for w in bench["workloads"]] == list(WORKLOADS)
 
 
-@pytest.mark.parametrize("earliest", [1000.0, 1003.3, 1007.9, 1009.99])
-def test_aligned_window_ends_just_before_a_trigger(earliest):
-    (lo, hi), start = rapid.aligned_window(earliest, 10.0)
-    half_tick = rapid.TICK / 2
-    assert (lo + half_tick) % rapid.TRIGGER_S == pytest.approx(0.0, abs=1e-9)
-    assert hi - lo == 10.0
-    assert lo - start >= rapid.MIN_WARMUP_S
-    assert earliest - rapid.TICK < start <= earliest
-    assert ((lo - start) / rapid.TICK) == pytest.approx(round((lo - start) / rapid.TICK))
+def test_end_backlog_reads_the_first_batch_after_the_last_file():
+    batches = [{"id": 3, "start_ts": 10.0}, {"id": 4, "start_ts": 14.2}, {"id": 5, "start_ts": 18.5}]
+    rows = {3: 4000, 4: 4300, 5: 2100}
+    assert behov.end_backlog(batches, rows, last_file=14.0) == 4300
+    assert behov.end_backlog(batches, rows, last_file=15.0) == 2100
+    assert behov.end_backlog(batches, rows, last_file=19.0) == 0

@@ -10,7 +10,7 @@
 - ``close()``: stop anything the workload started.
 """
 
+from perfbench.workloads.behov import BehovOpenLoop
 from perfbench.workloads.er import ErEpochs
-from perfbench.workloads.rapid import RapidOpenLoop
 
-WORKLOADS = {w.name: w for w in (RapidOpenLoop, ErEpochs)}
+WORKLOADS = {w.name: w for w in (BehovOpenLoop, ErEpochs)}
