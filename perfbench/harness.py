@@ -1,6 +1,6 @@
 """Run-scoped plumbing: the work directory, the Spark session and its
-set-up, run context, memory readings and shutdown of every process the
-run started."""
+set-up, run context, CPU and memory readings and shutdown of every
+process the run started."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from dataclasses import dataclass, field
 #: workload's inputs and state with room to spare and leaves the rest of
 #: the machine to the Python workers and other tenants
 DRIVER_MEMORY = "2g"
-SETUP_REPS = 3
+SETUP_REPS = 2
 
 
 def nproc() -> int:
@@ -32,6 +32,7 @@ class Run:
     seconds: float
     work: str = ""
     spark: object = None
+    jvm_pid: int = 0
     context: dict = field(default_factory=dict)
 
     def __post_init__(self):
@@ -56,8 +57,14 @@ def prepare_environment(work: str) -> None:
     os.environ["SPARK_LOCAL_DIRS"] = tmp
     os.environ["SPARK_DRIVER_MEMORY"] = DRIVER_MEMORY
     # every JVM the launch starts, the launcher's included: temp files in
-    # the work directory, and no hsperfdata files under /tmp
-    os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
+    # the work directory, and no hsperfdata files under /tmp. The JIT
+    # stops at C1: with C2, compilation still took 1-4 CPU seconds of
+    # every behov batch 25 s into a run and the batch CPU fell from 10 to
+    # 6 s over the measured window; with C1 it is done within the warm-up
+    # and a batch's CPU stays within about 10% across the window.
+    os.environ["JAVA_TOOL_OPTIONS"] = (
+        f"-XX:-UsePerfData -XX:TieredStopAtLevel=1 -Djava.io.tmpdir={tmp}"
+    )
     tempfile.tempdir = None
 
 
@@ -81,6 +88,7 @@ def build(run: Run):
         },
     )
     run.spark.range(1000).selectExpr("sum(id)").collect()
+    run.jvm_pid = run.spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
     return run.spark
 
 
@@ -129,12 +137,40 @@ def finish_context(run: Run) -> None:
         )
 
 
+def cpu_seconds(jvm_pid: int) -> float:
+    """CPU seconds (user + system) the engine has used so far: the driver
+    JVM, the Python workers it forks (with those it has reaped) and this
+    process. CPU time leaves out the time a thread waits for a core, so
+    it moves far less than wall time when other work shares the machine.
+    The generator, a child of this process, is not counted."""
+    children: dict[int, list[int]] = {}
+    ticks: dict[int, int] = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:  # the process ended while the table was read
+            continue
+        pid = int(name)
+        children.setdefault(int(fields[1]), []).append(pid)
+        # utime, stime, cutime, cstime (stat fields 14-17)
+        ticks[pid] = sum(int(x) for x in fields[11:15])
+    total, todo = 0, [jvm_pid]
+    while todo:
+        pid = todo.pop()
+        total += ticks.get(pid, 0)
+        todo += children.get(pid, [])
+    own = os.times()
+    return total / os.sysconf("SC_CLK_TCK") + own.user + own.system
+
+
 def peak_rss_mb(run: Run) -> float:
     """Peak resident memory of the driver JVM plus this Python process."""
     py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
     jvm_kb = 0
-    pid = run.spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
-    with open(f"/proc/{pid}/status") as f:
+    with open(f"/proc/{run.jvm_pid}/status") as f:
         for line in f:
             if line.startswith("VmHWM:"):
                 jvm_kb = int(line.split()[1])

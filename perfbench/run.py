@@ -1,19 +1,19 @@
 """Benchmark entry point. Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload behov_open_loop --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload behov_open_loop --seed 1 --seconds 20 --trace 0
 
 It generates the workload's inputs from ``--seed``, sets up several
-times (reporting the first, cold set-up), measures for ``--seconds``,
-checks every output against an independent oracle (the generator's
-manifest of needs, a DuckDB computation), prints each metric by name
-with its unit, and ends with one JSON line:
-``{"correct", "attempted", "failed", "metrics"}``. ``--trace 0`` reports
-the end-to-end metrics. ``--trace 1`` reports the per-layer metrics
-instead: after the workload's untimed warm-up operations it measures
-untraced, traced (spans and job counters on) and untraced again, and
-reports the tracing overhead as the traced median minus the untraced
-one. Spans and a result file per run are kept under
-``.perfbench_work/results``.
+times (reporting the first, cold set-up), runs the workload's untimed
+warm-up operations, measures for ``--seconds``, checks every output
+against an independent oracle (the generator's manifest of needs, a
+DuckDB computation), prints each metric by name with its unit, and ends
+with one JSON line: ``{"correct", "attempted", "failed", "metrics"}``.
+``--trace 0`` reports the end-to-end metrics, with latency and
+throughput as context. ``--trace 1`` reports the per-layer metrics
+instead: after the warm-up it measures untraced, then traced (spans and
+job counters on), and reports the tracing overhead as the traced median
+CPU per item minus the untraced one. Spans and a result file per
+run are kept under ``.perfbench_work/results``.
 """
 
 from __future__ import annotations
@@ -51,12 +51,16 @@ def attempt(workload, run, tracer, jobs) -> dict:
 
 
 def measure(workload, run, seconds: float, tracer, jobs) -> list[dict]:
-    """Operations back to back until ``seconds`` have passed (at least
-    one). The first operation that raises ends the loop."""
+    """Operations back to back within ``seconds`` (at least one): another
+    starts only if one as long as the last still ends in time. The first
+    operation that raises ends the loop."""
     ops = []
     deadline = time.perf_counter() + seconds
-    while not ops or time.perf_counter() < deadline:
+    last = 0.0
+    while not ops or time.perf_counter() + last <= deadline:
+        t0 = time.perf_counter()
         ops.append(attempt(workload, run, tracer, jobs))
+        last = time.perf_counter() - t0
         if ops[-1].get("error"):
             break
     return ops
@@ -81,19 +85,25 @@ def check_all(workload, run, ops) -> int:
     return failed
 
 
+def unit_cpu(ops) -> list[float]:
+    return [x for op in ops if not op.get("error") for x in op.get("cpu", ())]
+
+
 def end_to_end(workload, run, ops, setup) -> dict:
     from perfbench import stats
 
     run.context["op_seconds"] = [op["seconds"] for op in ops if "seconds" in op]
+    cpu = unit_cpu(ops)
     timed = [op for op in ops if op.get("samples")]
-    if not timed:
+    if not cpu or not timed:
         return {}
+    run.context["cpu_units"] = len(cpu)
     summary = stats.summarize([x for op in timed for x in op["samples"]])
     run.context["latency_samples"] = summary["n"]
     # the independent units behind those samples: the replies of one
-    # batch share its commit, an ER sequence is one sample. Too few stand
-    # behind a tail for it to be a gated metric, so it is context.
+    # batch share its commit, an ER sequence is one sample
     run.context["latency_units"] = sum(op.get("sample_batches", 1) for op in timed)
+    run.context["latency_p50_s"] = summary["p50"]
     run.context["latency_p90_s"] = summary["p90"]
     if "batch_rows" in timed[0]:
         run.context["batch_rows"] = [op["batch_rows"] for op in timed]
@@ -104,7 +114,7 @@ def end_to_end(workload, run, ops, setup) -> dict:
         # the set-up that launched the JVM, as a job starting up pays it;
         # the later, warm set-ups are context
         "setup_s": setup[0],
-        "latency_p50_s": summary["p50"],
+        "cpu_ms_per_item": 1000.0 * statistics.median(cpu),
     }
 
 
@@ -122,7 +132,7 @@ def main(argv=None) -> int:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
-    from perfbench import harness, metrics, stats
+    from perfbench import harness, metrics
     from perfbench.trace import JobCounter, Tracer
     from perfbench.workloads import WORKLOADS
 
@@ -140,23 +150,19 @@ def main(argv=None) -> int:
         setup = harness.set_up(run, workload.stage, setup_tracer)
         run.context["setup_samples"] = setup
         untraced = JobCounter(run.spark, False)
-        traced, base = [], []
-        if args.trace:
-            # the workload's untimed warm-up operations, then untraced,
-            # traced and untraced operations: the overhead compares the
-            # traced ones with those on either side, which cancels the
-            # drift of a still-warming JVM
-            ops = [
-                attempt(workload, run, Tracer(False), untraced) | {"warmup": True}
-                for _ in range(workload.trace_warmup_ops)
-            ]
-            if not any(op.get("error") for op in ops):
+        warmup = [
+            attempt(workload, run, Tracer(False), untraced) for _ in range(workload.warmup_ops)
+        ]
+        ops, traced, base = [], [], []
+        if not any(op.get("error") for op in warmup):
+            if args.trace:
                 tracer = Tracer(True)
                 base = measure(workload, run, args.seconds, Tracer(False), untraced)
                 traced = measure(workload, run, args.seconds, tracer, JobCounter(run.spark, True))
-                base += measure(workload, run, args.seconds, Tracer(False), untraced)
-        else:
-            ops = measure(workload, run, args.seconds, Tracer(False), untraced)
+            else:
+                ops = measure(workload, run, args.seconds, Tracer(False), untraced)
+        ops = warmup + ops
+        run.context["warmup_op_seconds"] = [op.get("seconds") for op in warmup]
         failed = check_all(workload, run, ops + traced + base)
         attempted = sum(op["attempted"] for op in ops + traced + base)
         if args.trace:
@@ -169,15 +175,17 @@ def main(argv=None) -> int:
                 "traced": [op["seconds"] for op in good],
                 "untraced": [op["seconds"] for op in base],
             }
-            if good and base:
+            if unit_cpu(good) and unit_cpu(base):
                 values.update(workload.layers(run, good, tracer))
-                values["trace.overhead_s"] = stats.percentile(
-                    [x for op in good for x in op["samples"]], 50.0
-                ) - stats.percentile([x for op in base for x in op["samples"]], 50.0)
+                values["trace.overhead_s"] = statistics.median(unit_cpu(good)) - statistics.median(
+                    unit_cpu(base)
+                )
             tracer.dump(os.path.join(results, f"{args.workload}-{args.seed}-spans.json"))
             units = dict(metrics.PER_LAYER)
         else:
-            values, units = end_to_end(workload, run, ops, setup), dict(metrics.END_TO_END)
+            values, units = end_to_end(workload, run, ops[workload.warmup_ops :], setup), dict(
+                metrics.END_TO_END
+            )
         run.context["peak_rss_mb"] = harness.peak_rss_mb(run)
         harness.finish_context(run)
     finally:
@@ -195,6 +203,9 @@ def main(argv=None) -> int:
     print(f"error_rate {failed / attempted:.6f} ratio ({failed}/{attempted})")
     for k, v in out["metrics"].items():
         print(f"{k} {v['value']:.6g} {v['unit']}")
+    for k, unit in metrics.CONTEXT:
+        if k in run.context:
+            print(f"{k} {run.context[k]:.6g} {unit} (context)")
     with open(os.path.join(results, f"{args.workload}-{args.seed}-trace{args.trace}.json"), "w") as f:
         json.dump({"context": run.context, **out}, f, indent=1, sort_keys=True)
     print(json.dumps(out))

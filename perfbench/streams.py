@@ -22,12 +22,14 @@ class Dispatch:
     """foreachBatch callable around one rapid. Its sink, :meth:`sink`,
     stands in for the topic the rapid publishes to: it collects each
     batch's replies into ``replies`` as (batch id, value) and notes when
-    they committed."""
+    they committed. ``cpu`` reads the engine's CPU seconds so far; each
+    batch records what it used."""
 
-    def __init__(self, rapid, tracer, jobs):
+    def __init__(self, rapid, tracer, jobs, cpu):
         self.rapid = rapid
         self.tracer = tracer
         self.jobs = jobs
+        self.cpu = cpu
         self.batches: list[dict] = []
         self.replies: list[tuple[int, str]] = []
         self._batch: dict | None = None
@@ -41,11 +43,12 @@ class Dispatch:
 
     def __call__(self, df, batch_id: int) -> None:
         self._batch = {"id": batch_id, "start_ts": time.time(), "sink_s": 0.0, "commit_ts": None}
+        cpu0 = self.cpu()
         with self.jobs.group("batch") as counts, self.tracer.span(
             "runtime.process_batch"
         ) as s:
             self.rapid.process_batch(df, batch_id)
-        self._batch.update(seconds=s["seconds"], **counts)
+        self._batch.update(seconds=s["seconds"], cpu_s=self.cpu() - cpu0, **counts)
         self.batches.append(self._batch)
 
     def start(self, source, checkpoint: str, **trigger):

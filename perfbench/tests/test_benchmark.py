@@ -9,13 +9,15 @@ from __future__ import annotations
 import json
 import os
 import statistics
+import subprocess
+import sys
 
 import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
-from perfbench import data, generator, metrics, oracle, stats
+from perfbench import data, generator, harness, metrics, oracle, stats
 from perfbench.workloads import behov
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -195,3 +197,50 @@ def test_end_backlog_reads_the_first_batch_after_the_last_file():
     assert behov.end_backlog(batches, rows, last_file=14.0) == 4300
     assert behov.end_backlog(batches, rows, last_file=15.0) == 2100
     assert behov.end_backlog(batches, rows, last_file=19.0) == 0
+
+
+# -- measurement loop and CPU readings ----------------------------------------
+
+
+def test_measure_starts_an_operation_only_if_it_still_fits(monkeypatch):
+    from perfbench import run as bench_run
+
+    clock = [0.0]
+    monkeypatch.setattr(bench_run.time, "perf_counter", lambda: clock[0])
+
+    class Fake:
+        def __init__(self, durations):
+            self.durations = list(durations)
+
+        def op(self, run, tracer, jobs):
+            clock[0] += self.durations.pop(0)
+            return {}
+
+    def count(durations, seconds):
+        clock[0] = 0.0
+        return len(bench_run.measure(Fake(durations), None, seconds, None, None))
+
+    assert count([4, 4, 4], 10.0) == 2  # a third would end at 12
+    assert count([12], 10.0) == 1  # at least one
+    assert count([3, 7, 1], 10.0) == 2  # judged by the last one's length
+
+
+def test_cpu_seconds_counts_the_engine_process_tree():
+    code = (
+        "import time\n"
+        "t = time.process_time()\n"
+        "while time.process_time() - t < 0.3: pass\n"
+        "print('busy', flush=True)\n"
+        "time.sleep(30)\n"
+    )
+    child = subprocess.Popen([sys.executable, "-c", code], stdout=subprocess.PIPE, text=True)
+    try:
+        assert child.stdout.readline().strip() == "busy"
+        own = os.times()
+        assert harness.cpu_seconds(child.pid) - (own.user + own.system) >= 0.25
+        # a pid that does not exist leaves only this process
+        own = os.times()
+        assert harness.cpu_seconds(-1) - (own.user + own.system) < 0.05
+    finally:
+        child.kill()
+        child.wait()

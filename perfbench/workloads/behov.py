@@ -5,13 +5,21 @@ Python ``on_packet`` handlers add ``@løsning`` and republish.
 
 A separate generator process (perfbench/generator.py) writes needs into
 the source directory at a fixed rate, whether or not the rapid keeps up
-(open loop). The rapid runs on a processing-time trigger shorter than a
-batch, so batches run back to back and a need waits for the batch in
-progress, then for its own: latency runs from a need's scheduled
-creation time to the commit of its reply in the sink, and is set by the
-rapid's batch cost, not by the trigger. That cost is mostly fixed: file
-listing, the multi-river persist and count, one ``mapInPandas`` per
-river and the sink write. Row volume matters less.
+(open loop). The rapid runs on a processing-time trigger longer than a
+batch takes, so every batch holds the needs of one trigger interval.
+
+The gated figure is the engine's CPU per need: a batch's CPU seconds
+over its rows, median over the batches that start in the measured
+window. A batch costs a fixed part (file listing, the multi-river
+persist and count, one ``mapInPandas`` per river, the sink write) and a
+part per need of about the same size, so a batch whose size followed its
+predecessor's duration (back-to-back batches) moved its CPU per batch
+and per need both by 10-20% between runs; batches of one trigger
+interval hold the same number of needs. CPU leaves out the time a
+thread waits for a core: with two of four cores taken by other work,
+latency rose by half and batch CPU by a tenth. Latency, from a need's
+scheduled creation time to the commit of its reply in the sink, is
+reported as context with its sample and batch counts.
 
 The river fan-out over the events rapid (parse once, one verdict branch
 per river, the rows a DLQ would receive) is measured by a traced run's
@@ -29,27 +37,25 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
-from perfbench import data, generator, stats
+from perfbench import data, generator, harness, stats
 from perfbench.streams import Dispatch, batch_layers, progress_phases
 
 #: events staged as the rapid the traced probe reads
 N_EVENTS = 8_000
 N_FILES = 4
-#: needs per second. A batch's cost is mostly fixed (3-4 s in the fresh
-#: JVM of a run), but each need it holds adds to it, and a longer batch
-#: makes the next one hold more. At 1,000/s (sized on a warm JVM) batches
-#: of 4-6k needs ran near capacity; at 500/s a slow batch could still
-#: grow the ones after it, and the p50 spread over ten seeds reached
-#: 0.23-0.32. At 250/s a batch holds about 1k needs.
-RATE = 250.0
+#: needs per second: 600 needs per trigger interval, which a batch
+#: processes in about 3 s here (C1-compiled JVM, 4 vCPUs)
+RATE = 120.0
 TICK = 0.25  # seconds between generator files
-#: generator time before the measured window: the stream's first, cold
-#: batch runs in it
-LEAD_S = 4.0
+#: generator time before the measured window: the stream's first
+#: batches, the slowest while the JIT compiles, run in it
+LEAD_S = 8.0
+#: seconds between reads of the query's progress while it runs
+POLL_S = 0.5
 DRAIN_TIMEOUT_S = 60.0
-#: processing-time trigger, shorter than any batch: each batch starts as
-#: soon as the one before it commits
-TRIGGER_S = 1
+#: processing-time trigger, longer than a batch takes (with a margin of
+#: about 70% for a slower host), so batches do not run back to back
+TRIGGER_S = 5
 #: event rivers of the traced probe: cycled ``@event_name``
 #: preconditions and required keys. ``discount`` exists only on events
 #: worth more than 100, so that river rejects most of its matches.
@@ -127,7 +133,7 @@ def end_backlog(batches: list[dict], rows: dict[int, int], last_file: float) -> 
 class BehovOpenLoop:
     name = "behov_open_loop"
     unit = "msgs"  # counted by throughput: messages per second of batch time
-    trace_warmup_ops = 0  # every operation starts warm (see _warm_up)
+    warmup_ops = 0  # every operation starts warm (see _warm_up and LEAD_S)
 
     def __init__(self, seed: int):
         self.seed = seed
@@ -194,7 +200,7 @@ class BehovOpenLoop:
         rapid = StreamingRapid(spark, service_name="perfbench", instance_id="rapid")
         rapid.set_source(source)
         timer = rapid.enable_packet_timers() if tracer.enabled else None
-        dispatch = Dispatch(rapid, tracer, jobs)
+        dispatch = Dispatch(rapid, tracer, jobs, lambda: harness.cpu_seconds(run.jvm_pid))
         rapid.set_sink(dispatch.sink)
         for river in need_rivers():
             rapid.register(river)
@@ -214,7 +220,7 @@ class BehovOpenLoop:
         try:
             while self.proc.poll() is None:
                 processed()
-                time.sleep(0.2)
+                time.sleep(POLL_S)
             if self.proc.returncode != 0:
                 raise RuntimeError(f"generator exited with {self.proc.returncode}")
             with open(os.path.join(d, "manifest.json")) as f:
@@ -222,7 +228,7 @@ class BehovOpenLoop:
             emitted = len(manifest["needs"])
             deadline = time.time() + DRAIN_TIMEOUT_S
             while processed() < emitted and time.time() < deadline:
-                time.sleep(0.2)
+                time.sleep(POLL_S)
             drain_end = time.time()
         finally:
             query.stop()
@@ -232,6 +238,9 @@ class BehovOpenLoop:
         busy = [b for b in dispatch.batches if rows.get(b["id"])]
         return {
             "window": window,
+            "cpu": [
+                b["cpu_s"] / rows[b["id"]] for b in busy if window[0] <= b["start_ts"] < window[1]
+            ],
             "manifest": manifest,
             "backlog": end_backlog(
                 dispatch.batches, rows, window[1] + manifest["lateness"][-1]
