@@ -543,10 +543,8 @@ def unigram_viterbi(words, vocab):
 
     # bounded-collect: the trained vocabulary (all corpus chars + the
     # top_v multi-char pieces), KB-scale by construction
-    vmap = {
-        r["piece"]: int(r["cnt"])
-        for r in vocab.select("piece", "cnt").collect()
-    }
+    rows = vocab.select("piece", "cnt").collect()
+    vmap = {r["piece"]: int(r["cnt"]) for r in rows}
     NS = (None, None, None)  # the null-fields candidate (see docstring)
 
     def _key(c):

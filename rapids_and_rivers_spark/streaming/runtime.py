@@ -16,11 +16,18 @@ sinks.
 
 Handler execution model:
 - ``river.respond(fn)``   expression responders — full Catalyst plan,
-                          scalable path;
+                          one sink-plan branch per responder, scalable
+                          path;
 - ``river.on_packet(fn)`` imperative Python handlers — executed on the
-                          EXECUTORS via ``mapInPandas`` (Arrow batches),
-                          each packet wrapped in :class:`Packet` with a
-                          collecting publish context. No driver-side
+                          EXECUTORS in ONE packet stage per batch, shared
+                          by every packet river: a projection tags each
+                          row with the packet rivers it passes, and one
+                          ``mapInPandas`` (Arrow batches) runs each
+                          passing river's listeners on a fresh
+                          :class:`Packet` with a collecting publish
+                          context. The stage is sized by rows
+                          (``ROWS_PER_BRANCH_TASK``), since every Python
+                          task pays a fixed start-up cost. No driver-side
                           collect of message payloads.
 """
 
@@ -59,7 +66,9 @@ class MessageMetadata:
 
 def _wants_metadata(fn) -> bool:
     """True if the listener accepts a third (metadata) parameter —
-    RapidsConnection.kt:112 signature; two-arg listeners stay supported."""
+    RapidsConnection.kt:112 signature; two-arg listeners stay supported.
+    A defaulted parameter (``lambda packet, ctx, i=i: ...``) is not the
+    metadata slot: the runtime never fills it."""
     import inspect
 
     try:
@@ -73,7 +82,7 @@ def _wants_metadata(fn) -> bool:
         return False
     if any(p.kind == p.VAR_POSITIONAL for p in params):
         return True
-    return len(params) >= 3
+    return sum(p.default is p.empty for p in params) >= 3
 
 
 def listener_label(river: River, fn, index: int) -> str:
@@ -83,19 +92,30 @@ def listener_label(river: River, fn, index: int) -> str:
     return f"{river.name}/{index}:{name}"
 
 
-def run_packet_listeners(
-    passing: DataFrame,
-    river: River,
+#: per-row indexes of the packet rivers a message passes (packet stage input)
+RIVERS_COL = "__packet_rivers"
+
+
+def run_packet_stage(
+    parsed: DataFrame,
+    rivers: list[River],
     service_name: str | None,
     instance_id: str | None,
     timer=None,
     span_hook=None,
 ) -> DataFrame:
-    """Execute Python packet handlers on the executors, returning replies.
+    """Execute every packet river's Python handlers in ONE executor pass.
 
-    Each input row becomes a :class:`Packet`; handler ``publish`` calls are
-    collected and stamped with causation + fresh id (JsonMessageContext
-    semantics) — all inside an Arrow-batched ``mapInPandas``.
+    One projection over the parsed batch (``__variant`` attached) adds
+    the indexes of the rivers in ``rivers`` whose verdict is PASS; rows
+    passing none are dropped. A single Arrow-batched ``mapInPandas``
+    then hands each (row, passing river) a FRESH :class:`Packet` — the
+    reference parses a message once per river (River.kt:53-55), so a
+    field one river's listener sets never reaches another river. Each
+    river keeps its declared keys, listener order, timers and span
+    labels; handler ``publish`` calls are collected and stamped with
+    causation + fresh id (JsonMessageContext semantics) after the
+    river's last listener has run.
 
     With a :class:`~rapids_and_rivers_spark.metrics.PacketTimer`, each
     listener call is timed executor-side (`on_packet_seconds` parity,
@@ -109,25 +129,44 @@ def run_packet_listeners(
     production its body opens/closes an OTel span (or writes to any
     tracing backend reachable from the executor); it must not assume
     driver state.
+
+    The record-scope MDC (KafkaRapid.kt:160-161) wraps one record's
+    dispatch through all of its rivers, as the reference's does.
     """
-    listeners = river.listeners
-    declared = list(river.declared_keys)
-    svc, inst = service_name, instance_id
-    river_name = river.name
-    labels = [listener_label(river, fn, i) for i, fn in enumerate(listeners)]
-    timer_pairs = (
-        [timer.pair(label) for label in labels]
-        if timer is not None
-        else None
-    )
-    # metadata plumbing (RapidsConnection.kt:112): listeners declaring a
-    # third parameter receive MessageMetadata built from whichever record
-    # coordinates the source carries (arity inspected ONCE, driver-side)
-    wants_meta = [_wants_metadata(fn) for fn in listeners]
+    specs = []
+    for river in rivers:
+        listeners = river.listeners
+        labels = [listener_label(river, fn, i) for i, fn in enumerate(listeners)]
+        specs.append(
+            (
+                river.name,
+                list(river.declared_keys),
+                listeners,
+                labels,
+                [timer.pair(label) for label in labels] if timer is not None else None,
+                # metadata plumbing (RapidsConnection.kt:112): arity
+                # inspected ONCE, driver-side
+                [_wants_metadata(fn) for fn in listeners],
+            )
+        )
+    # listeners declaring a third parameter receive MessageMetadata built
+    # from whichever record coordinates the source carries
     meta_cols = (
-        [c for c in META_COLS if c in passing.columns]
-        if any(wants_meta)
+        [c for c in META_COLS if c in parsed.columns]
+        if any(any(wants) for *_, wants in specs)
         else []
+    )
+    v = F.col(VARIANT_COL)
+    passed = F.array_compact(
+        F.array(
+            *(
+                F.when(river.verdict_expr(v)[VERDICT_COL] == Verdict.PASS, F.lit(i))
+                for i, river in enumerate(rivers)
+            )
+        )
+    )
+    routed = parsed.select("value", "key", *meta_cols, passed.alias(RIVERS_COL)).filter(
+        F.size(RIVERS_COL) > 0
     )
 
     def gen(batches):
@@ -135,10 +174,9 @@ def run_packet_listeners(
 
         import pandas as pd
 
+        from rapids_and_rivers_spark.logcontext import record_diagnostics, with_mdc
         from rapids_and_rivers_spark.packet import Packet
         from rapids_and_rivers_spark.problems import MessageProblemsException
-
-        from rapids_and_rivers_spark.logcontext import record_diagnostics, with_mdc
 
         for pdf in batches:
             out_vals: list[str] = []
@@ -146,7 +184,9 @@ def run_packet_listeners(
             meta_rows = (
                 list(zip(*(pdf[c] for c in meta_cols))) if meta_cols else None
             )
-            for row_i, (value, key) in enumerate(zip(pdf["value"], pdf["key"])):
+            for row_i, (value, key, passing) in enumerate(
+                zip(pdf["value"], pdf["key"], pdf[RIVERS_COL])
+            ):
                 meta_vals = (
                     dict(zip(meta_cols, meta_rows[row_i])) if meta_rows else {}
                 )
@@ -159,48 +199,52 @@ def run_packet_listeners(
                         meta_vals["headers"] = {h["key"]: h["value"] for h in hdrs}
                     except TypeError:
                         meta_vals["headers"] = None
-                try:
-                    packet = Packet(value, service_name=svc, instance_id=inst)
-                except MessageProblemsException:
-                    continue
-                packet.declare(*declared)
-                published: list[tuple[str | Packet, str | None]] = []
-
-                class _Ctx:
-                    def publish(self, message, key_override=None):
-                        published.append((message, key_override))
-
-                ctx = _Ctx()
-                meta = MessageMetadata(key=key, **meta_vals) if any(wants_meta) else None
-                # record-scope MDC (KafkaRapid.kt:160-161): handler-side
-                # log lines carry per-record diagnostics
                 with with_mdc(record_diagnostics(value)):
-                    for i, fn in enumerate(listeners):
-                        args = (packet, ctx, meta) if wants_meta[i] else (packet, ctx)
-                        if timer_pairs is None and span_hook is None:
-                            fn(*args)
-                        else:
-                            t0 = _time.perf_counter()
-                            fn(*args)
-                            dt = _time.perf_counter() - t0
-                            if timer_pairs is not None:
-                                count_acc, sec_acc = timer_pairs[i]
-                                count_acc.add(1)
-                                sec_acc.add(dt)
-                            if span_hook is not None:
-                                span_hook(river_name, labels[i], dt)
-                for message, key_override in published:
-                    reply = (
-                        message
-                        if isinstance(message, Packet)
-                        else Packet(message, stamp=False)
-                    )
-                    packet.populate_standard_fields(reply)
-                    out_vals.append(reply.to_json())
-                    out_keys.append(key_override if key_override is not None else key)
+                    for r in passing:
+                        river_name, declared, listeners, labels, pairs, wants_meta = specs[r]
+                        try:
+                            packet = Packet(
+                                value, service_name=service_name, instance_id=instance_id
+                            )
+                        except MessageProblemsException:
+                            continue
+                        packet.declare(*declared)
+                        published: list[tuple[str | Packet, str | None]] = []
+
+                        class _Ctx:
+                            def publish(self, message, key_override=None):
+                                published.append((message, key_override))
+
+                        ctx = _Ctx()
+                        meta = (
+                            MessageMetadata(key=key, **meta_vals) if any(wants_meta) else None
+                        )
+                        for i, fn in enumerate(listeners):
+                            args = (packet, ctx, meta) if wants_meta[i] else (packet, ctx)
+                            if pairs is None and span_hook is None:
+                                fn(*args)
+                            else:
+                                t0 = _time.perf_counter()
+                                fn(*args)
+                                dt = _time.perf_counter() - t0
+                                if pairs is not None:
+                                    count_acc, sec_acc = pairs[i]
+                                    count_acc.add(1)
+                                    sec_acc.add(dt)
+                                if span_hook is not None:
+                                    span_hook(river_name, labels[i], dt)
+                        for message, key_override in published:
+                            reply = (
+                                message
+                                if isinstance(message, Packet)
+                                else Packet(message, stamp=False)
+                            )
+                            packet.populate_standard_fields(reply)
+                            out_vals.append(reply.to_json())
+                            out_keys.append(key_override if key_override is not None else key)
             yield pd.DataFrame({"value": out_vals, "key": out_keys})
 
-    return passing.select("value", "key", *meta_cols).mapInPandas(gen, REPLY_SCHEMA)
+    return routed.mapInPandas(gen, REPLY_SCHEMA)
 
 
 class StreamingRapid(AbstractRapid):
@@ -242,7 +286,7 @@ class StreamingRapid(AbstractRapid):
         """Install the per-listener tracing hook (River.kt:74-76 analog):
         ``fn(river_name, listener_label, duration_seconds)`` fires on the
         executor after every packet-listener call. See
-        :func:`run_packet_listeners`."""
+        :func:`run_packet_stage`."""
         self.span_hook = fn
         return self
 
@@ -336,10 +380,16 @@ class StreamingRapid(AbstractRapid):
         with with_mdc(poll_diagnostics(batch_id)):
             self._process_batch_inner(batch_df, batch_id)
 
-    #: per-branch task sizing for the multi-river union plan: batches
-    #: smaller than rivers x this many rows coalesce the cached parse
-    #: so branch scans aren't scheduler-bound (AQE can't do this inside
-    #: a streaming batch)
+    #: rows per task of a sink-plan branch: batches smaller than
+    #: branches x this many rows coalesce the cached parse so branch
+    #: scans aren't scheduler-bound (AQE can't do this inside a
+    #: streaming batch), and the packet stage runs ceil(rows / this)
+    #: tasks. A Python task costs ~0.25-0.35 CPU-s whatever its rows
+    #: (identity mapInPandas on 4 cores: 50 rows 0.25 s, 20k rows 0.28 s,
+    #: 600 rows over 12 tasks 3.7 s): each task starts with the worker's
+    #: setup_spark_files -> importlib.invalidate_caches(), and each of
+    #: the ~16 zipimporters over pyspark.zip (one per imported
+    #: subpackage) re-reads the whole zip directory.
     ROWS_PER_BRANCH_TASK = 20_000
 
     def _process_batch_inner(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -348,63 +398,70 @@ class StreamingRapid(AbstractRapid):
         msgs = batch_df.filter(F.col("value").isNotNull() & (F.length("value") > 0))
         for fn in self._raw_listeners:
             fn(msgs)
-        # parse ONCE per batch; every river's branch and the DLQ union read
-        # the cached parsed batch instead of re-scanning + re-parsing the
-        # source per river (the union sink plan has one branch per river)
+        # parse ONCE per batch; every branch and the DLQ union read the
+        # cached parsed batch instead of re-scanning + re-parsing the
+        # source per river
         from rapids_and_rivers_spark.functions import json_ops as J
 
         parsed = msgs.withColumn(VARIANT_COL, J.parse(F.col("value")))
-        multi = len(self._rivers) > 1
+        packet_rivers = [r for r in self._rivers if r.listeners]
+        # branches of the sink plan: one per river with responders or
+        # with no packet listeners, plus ONE packet stage shared by every
+        # packet river
+        branches = sum(1 for r in self._rivers if r.responders or not r.listeners) + (
+            1 if packet_rivers else 0
+        )
         cached = None
-        if multi:
+        if branches > 1 or packet_rivers:
             parsed = cached = parsed.persist()
-            # The union sink plan has one branch per river, and AQE is
-            # unavailable inside a streaming batch — so at N rivers the
-            # write costs N x partitions tasks regardless of batch
-            # size. For small/medium batches that is pure scheduler
-            # overhead (measured: 100 rivers over a 5k-message batch =
-            # 3200 near-empty tasks, 7x the useful wall). Right-size
-            # the cached batch ONCE (count is one cheap action that
-            # also materializes the cache) and let every branch read
-            # the narrowed cache; big batches keep full parallelism.
+            # The union sink plan has one branch per river (one for all
+            # packet rivers), and AQE is unavailable inside a streaming
+            # batch — so at N branches the write costs N x partitions
+            # tasks regardless of batch size. For small/medium batches
+            # that is pure scheduler overhead (measured: 100 rivers over
+            # a 5k-message batch = 3200 near-empty tasks, 7x the useful
+            # wall). Right-size the cached batch ONCE (count is one
+            # cheap action that also materializes the cache) and let
+            # every branch read the narrowed cache; big batches keep
+            # full parallelism.
             #
             # NOTE a fused all-rivers verdict projection (SURVEY §4's
             # routing-bitmap sketch) was built and MEASURED 7-8x worse
-            # here: branches only ever evaluate their own rule set, so
-            # fusing saves no work — it just turns 100 small codegen'd
-            # branch predicates into one 100-struct projection (codegen
-            # blowup) and a 100x wider cache. Negative result recorded
-            # in bench.py's river_fanout row history (round 6).
+            # for expression responders: branches only ever evaluate
+            # their own rule set, so fusing saves no work — it just
+            # turns 100 small codegen'd branch predicates into one
+            # 100-struct projection (codegen blowup) and a 100x wider
+            # cache. Negative result recorded in bench.py's river_fanout
+            # row history (round 6). Packet rivers ARE fused (see
+            # run_packet_stage): there the fixed cost of each Python
+            # task, not the predicates, dominates.
             n = parsed.count()
             parts = parsed.rdd.getNumPartitions()
-            # per-branch partitions: every river's branch tasks compete
-            # in ONE union stage, so give each branch ~its fair share
-            # of 3x the cores (3x for stragglers), floored by data
-            # volume so huge batches always keep full row parallelism
+            # per-branch partitions: every branch's tasks compete in ONE
+            # union stage, so give each branch ~its fair share of 3x the
+            # cores (3x for stragglers), floored by data volume so huge
+            # batches always keep full row parallelism
             cores = self.spark.sparkContext.defaultParallelism
-            fair = max(1, (3 * cores) // len(self._rivers))
+            fair = max(1, (3 * cores) // branches)
             floor = -(-n // self.ROWS_PER_BRANCH_TASK)
             target = min(parts, max(fair, floor))
             if target < parts:
                 parsed = parsed.coalesce(target)
+            # the Python stage is sized by rows alone: its tasks pay a
+            # fixed cost that no fair share of cores wins back
+            packet_parts = max(1, min(parts, floor))
         replies: list[DataFrame] = []
         dlq_parts: list[DataFrame] = []
         for river in self._rivers:
+            if not river.responders and self._dlq is None:
+                # only the packet stage reads this river's verdict, and
+                # building the expression is driver time: ~740 py4j
+                # round trips, ~0.17 s, for a 4-rule river
+                continue
             evaluated = river.evaluate(parsed)
             passing = evaluated.filter(F.col(VERDICT_COL) == Verdict.PASS)
             for responder in river.responders:
                 replies.append(responder(passing).select("value", "key"))
-            if river.listeners:
-                replies.append(
-                    run_packet_listeners(
-                        passing,
-                        river,
-                        self.service_name,
-                        self.instance_id,
-                        timer=self.packet_timer,
-                        span_hook=self.span_hook,
-                    )
-                )
             if self._dlq is not None:
                 dlq_parts.append(
                     evaluated.filter(F.col(VERDICT_COL) != Verdict.PASS).select(
@@ -415,6 +472,17 @@ class StreamingRapid(AbstractRapid):
                         "key",
                     )
                 )
+        if packet_rivers:
+            replies.append(
+                run_packet_stage(
+                    parsed.coalesce(packet_parts),
+                    packet_rivers,
+                    self.service_name,
+                    self.instance_id,
+                    timer=self.packet_timer,
+                    span_hook=self.span_hook,
+                )
+            )
         try:
             if replies and self._sink is not None:
                 out = replies[0]

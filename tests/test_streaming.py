@@ -815,3 +815,97 @@ def test_metadata_headers_decoded_to_map(spark, tmp_path):
     values = [json.loads(r.value) for r in spark.read.parquet(out).collect()]
     assert values[0]["hdr_trace"] == "abc-123"
     assert values[0]["hdr_none"] is True
+
+
+def test_wants_metadata_counts_only_undefaulted_slots():
+    """A defaulted third parameter is a closure capture, not the
+    metadata slot; an explicit third parameter or ``*args`` is."""
+    from rapids_and_rivers_spark.streaming.runtime import _wants_metadata
+
+    i = 3
+    assert not _wants_metadata(lambda packet, ctx, i=i: None)
+    assert _wants_metadata(lambda packet, context, metadata: None)
+    assert _wants_metadata(lambda *args: None)
+    assert not _wants_metadata(lambda packet, context: None)
+
+
+def test_packet_rivers_share_one_isolated_stage(spark):
+    """All packet rivers run in ONE mapInPandas, yet each (message,
+    river) gets its own Packet: a field river A sets never reaches
+    river B's reply, every reply is caused by its input, and a message
+    passing no river yields nothing."""
+    msgs = [
+        json.dumps({"@id": f"id-{i}", "@event_name": "need", "n": i}) for i in range(3)
+    ] + [json.dumps({"@id": "id-other", "@event_name": "other"})]
+    df = spark.createDataFrame([(m, None) for m in msgs], "value string, key string")
+
+    def mark(field):
+        def listener(packet, context):
+            packet[field] = True
+            context.publish(packet)
+
+        return listener
+
+    rapid = StreamingRapid(spark, "app", "i-1")
+    for name in ("ra", "rb"):
+        rapid.register(
+            River(name)
+            .validate(P.require_value("@event_name", "need"))
+            .on_packet(mark(f"from_{name}"))
+        )
+    plans, replies = [], []
+
+    def sink(out):
+        plans.append(out._jdf.queryExecution().optimizedPlan().toString())
+        replies.extend(json.loads(r.value) for r in out.collect())
+
+    rapid.set_sink(sink)
+    rapid.process_batch(df)
+    assert len(plans) == 1 and plans[0].count("MapInPandas") == 1
+    assert len(replies) == 6
+    a = [r for r in replies if "from_ra" in r]
+    b = [r for r in replies if "from_rb" in r]
+    assert len(a) == len(b) == 3
+    assert not any("from_rb" in r for r in a)
+    causes = sorted(r["@forårsaket_av"]["id"] for r in replies)
+    assert causes == sorted([f"id-{i}" for i in range(3)] * 2)
+    assert sorted(r["n"] for r in a) == sorted(r["n"] for r in b) == [0, 1, 2]
+
+
+def test_small_batch_runs_packet_stage_as_one_task(spark):
+    """Below ROWS_PER_BRANCH_TASK rows, the packet stage of three rivers
+    is sized by rows, not by input partitions or river count: the reply
+    write runs as one task."""
+    needs = ("a", "b", "c")
+    msgs = [json.dumps({"@event_name": "need", "type": needs[i % 3]}) for i in range(30)]
+    df = spark.createDataFrame([(m, None) for m in msgs], "value string, key string")
+    assert df.rdd.getNumPartitions() > 1
+    assert len(msgs) < StreamingRapid.ROWS_PER_BRANCH_TASK
+
+    def solve(packet, context):
+        context.publish(packet)
+
+    rapid = StreamingRapid(spark, "app", "i-1")
+    for need in needs:
+        rapid.register(
+            River(f"need_{need}").validate(P.require_value("type", need)).on_packet(solve)
+        )
+    sc = spark.sparkContext
+    group = "packet-stage-sizing"
+    replies = []
+
+    def sink(out):
+        sc.setJobGroup(group, "reply write")
+        try:
+            replies.extend(out.collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    rapid.set_sink(sink)
+    rapid.process_batch(df)
+    assert len(replies) == 30
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(jobs[0]).stageIds]
+    assert [(s.numTasks, s.numCompletedTasks) for s in stages] == [(1, 1)]
