@@ -12,6 +12,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Default ``spark.driver.memory``: 60% of physical RAM, capped at 24g.
+
+    Local mode runs ONE JVM, so driver memory IS the executor+storage
+    pool. 8g filled up once the catalog passed ~150 persisting queries
+    in a single session — storage eviction then forces exponential
+    recompute in queries that re-reference persisted subtrees
+    (dedup_clusters measured 1.6 -> 9.6 s purely from eviction). 24g
+    balanced storage headroom against GC pause scaling on a 128 GiB box
+    (64g measured WORSE end-to-end: bigger heaps, longer collections).
+    A heap larger than the machine can back risks losing the JVM (a
+    test run on a 15 GB box lost it under the old fixed 24g), so smaller
+    machines get 60% of their RAM, leaving the rest to Python workers
+    and the OS. On a cluster, executors size storage separately."""
+    ram_mb = (os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")) >> 20
+    return f"{min(24 * 1024, int(ram_mb * 0.6))}m"
+
+
 def build_session(
     app_name: str = "rapids_and_rivers_spark",
     master: str | None = None,
@@ -61,15 +79,10 @@ def build_session(
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # local mode = ONE JVM: driver memory IS the executor+storage pool.
-        # 8g filled up once the catalog passed ~150 persisting queries in a
-        # single session — storage eviction then forces exponential
-        # recompute in queries that re-reference persisted subtrees
-        # (dedup_clusters measured 1.6 -> 9.6 s purely from eviction). The
-        # box has 128 GiB (24g balances storage headroom against GC pause
-        # scaling — 64g measured WORSE end-to-end: bigger heaps, longer
-        # collections); on a cluster, executors size storage separately.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -39,6 +39,7 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -868,6 +869,15 @@ def ivf_ingest_foreach_batch(codebook: list, out_dir: str, emb_col: str = "c_emb
     return stage
 
 
+def _minhash_stores(index_dir: str, pairs_dir: str) -> list:
+    # bands, shingles and the verified-pair output: append-only unions
+    return [
+        EpochStore(os.path.join(index_dir, "bands"), "union"),
+        EpochStore(os.path.join(index_dir, "shingles"), "union"),
+        EpochStore(pairs_dir, "union"),
+    ]
+
+
 def minhash_index_foreach_batch(
     index_dir: str,
     pairs_dir: str,
@@ -910,16 +920,13 @@ def minhash_index_foreach_batch(
     )
 
     rows_per_band = num_hashes // bands
+    stores = _minhash_stores(index_dir, pairs_dir)
+    band_store, shingle_store, pair_store = stores
 
     def stage(batch_df: DataFrame, epoch_id: int) -> None:
         # refuse a replay of an epoch already folded by the store's
         # compactor (ADVICE r10 — silent folded-history overwrite)
-        guard_uncompacted_epoch(
-            epoch_id,
-            os.path.join(index_dir, "bands"),
-            os.path.join(index_dir, "shingles"),
-            pairs_dir,
-        )
+        guard_uncompacted_epoch(epoch_id, *(s.root for s in stores))
         spark = batch_df.sparkSession
         base = (
             shingled(batch_df, col, id_col, n=shingle_n)
@@ -950,13 +957,9 @@ def minhash_index_foreach_batch(
         # write new docs to the index FIRST so the candidate join sees
         # new-new pairs too (old-old pairs never recompute); per-epoch
         # subdir + overwrite = idempotent under epoch replay
-        banded.write.mode("overwrite").parquet(
-            os.path.join(index_dir, "bands", f"v{epoch_id}")
-        )
-        base.select("id", "shingles").write.mode("overwrite").parquet(
-            os.path.join(index_dir, "shingles", f"v{epoch_id}")
-        )
-        all_bands = read_epoch_table(spark, os.path.join(index_dir, "bands"))
+        band_store.write(banded, epoch_id)
+        shingle_store.write(base.select("id", "shingles"), epoch_id)
+        all_bands = read_epoch_table(spark, band_store.root)
         # broadcast the BATCH side (same rationale as the ER candidate
         # join): the accumulated band index grows without bound, the new
         # epoch's bands are micro-batch bounded — broadcast-hash keeps
@@ -975,7 +978,7 @@ def minhash_index_foreach_batch(
             )
             .dropDuplicates(["id_a", "id_b"])
         )
-        shingle_tbl = read_epoch_table(spark, os.path.join(index_dir, "shingles"))
+        shingle_tbl = read_epoch_table(spark, shingle_store.root)
         verified = (
             cand.join(
                 shingle_tbl.select(
@@ -998,9 +1001,7 @@ def minhash_index_foreach_batch(
             )
             .filter(F.col("jaccard") >= threshold)
         )
-        verified.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"v{epoch_id}")
-        )
+        pair_store.write(verified, epoch_id)
         base.unpersist()
 
     return stage
@@ -1152,6 +1153,16 @@ def semdedup_keep_list(spark, index_dir: str, id_col: str = "vec_id") -> DataFra
 # --- streaming cluster-blocked SemDeDup (round 11) ---------------------------
 
 
+def _semdedup_clustered_stores(index_dir: str) -> list:
+    # cell-partitioned vectors (touched-cell directory pruning; folded
+    # rows take epoch = through_epoch, still below any later epoch's
+    # prior read) and the append-only pair output
+    return [
+        EpochStore(os.path.join(index_dir, "vecs"), "epoch", partition_col="cell"),
+        EpochStore(os.path.join(index_dir, "pairs"), "union"),
+    ]
+
+
 def semdedup_clustered_foreach_batch(
     index_dir: str,
     dim: int = 64,
@@ -1216,15 +1227,13 @@ def semdedup_clustered_foreach_batch(
     # pattern: re-reading + re-collecting the never-changing codebook per
     # epoch was pure driver overhead; a restarted stream reloads once
     cents_cache: list = []
+    stores = _semdedup_clustered_stores(index_dir)
+    vecs, pair_store = stores
 
     def stage(batch_df: DataFrame, epoch_id: int) -> None:
         # refuse a replay of an epoch already folded by the store's
         # compactor (the compaction-watermark contract)
-        guard_uncompacted_epoch(
-            epoch_id,
-            os.path.join(index_dir, "vecs"),
-            os.path.join(index_dir, "pairs"),
-        )
+        guard_uncompacted_epoch(epoch_id, *(s.root for s in stores))
         spark = batch_df.sparkSession
         cb_dir = os.path.join(index_dir, "codebook")
         if not fsutil.exists(os.path.join(cb_dir, "_SUCCESS")):
@@ -1246,7 +1255,6 @@ def semdedup_clustered_foreach_batch(
                 codebook_from_table(spark.read.parquet(cb_dir))
             )
         cents = cents_cache[0]
-        vecs_root = os.path.join(index_dir, "vecs")
         assigned = assign_cells(
             batch_df.select(
                 F.col(id_col).alias("id"), F.col(emb_col).alias("c_emb")
@@ -1256,16 +1264,14 @@ def semdedup_clustered_foreach_batch(
         ).persist()
         # persist-scope: in-function — assigned feeds the store write,
         # the touched-cell collect and the pair join; unpersisted below
-        assigned.repartition("cell").write.partitionBy("cell").mode(
-            "overwrite"
-        ).parquet(os.path.join(vecs_root, f"epoch={int(epoch_id)}"))
+        epoch_dir = vecs.write(assigned, epoch_id)
         # >2x corpus-outgrowth re-cluster event, detectable (VERDICT r11
         # #9) — driver-side footer metadata, no extra job
         record_codebook_corpus(
             spark,
             index_dir,
             epoch_id,
-            os.path.join(vecs_root, f"epoch={int(epoch_id)}"),
+            epoch_dir,
             expected_corpus_rows=expected_corpus_rows,
         )
         # fed to a directory-pruned store read (the er_index bkt_rows
@@ -1274,18 +1280,17 @@ def semdedup_clustered_foreach_batch(
         touched = [
             r["cell"] for r in assigned.select("cell").distinct().collect()
         ]
-        spark.catalog.refreshByPath(vecs_root)
-        prior = (
-            read_store(spark, vecs_root)
-            .filter(
-                (F.col("epoch") < int(epoch_id))
-                & F.col("cell").isin(touched)
-            )
-            .select("id", "c_emb", "cell", F.lit(False).alias("is_new"))
-        )
+        spark.catalog.refreshByPath(vecs.root)
         both = assigned.select(
             "id", "c_emb", "cell", F.lit(True).alias("is_new")
-        ).unionByName(prior)
+        )
+        prior = vecs.prior(spark, epoch_id)
+        if prior is not None:
+            both = both.unionByName(
+                prior.filter(F.col("cell").isin(touched)).select(
+                    "id", "c_emb", "cell", F.lit(False).alias("is_new")
+                )
+            )
         pairs = cell_blocked_neardup_pairs(
             both,
             dim,
@@ -1296,9 +1301,7 @@ def semdedup_clustered_foreach_batch(
             cell_col="cell",
             new_col="is_new",
         )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(index_dir, "pairs", f"v{int(epoch_id)}")
-        )
+        pair_store.write(pairs, epoch_id)
         assigned.unpersist()
 
     return stage
@@ -1340,25 +1343,12 @@ def semdedup_clustered_keep_list(
 def semdedup_clustered_compact_store(
     spark, index_dir: str, through_epoch: int
 ) -> None:
-    """Compact the streaming cluster-blocked SemDeDup index: the
-    cell-partitioned vector store keeps its layout
-    (:func:`compact_epoch_store` — touched-cell pruning untouched, the
-    folded rows' ``epoch`` becomes ``through_epoch``, still strictly
-    below any future epoch's ``epoch <`` prior read); the pair output
-    is an append-only union store. Same committed-epochs-only safety
-    contract as every compactor here; the frozen codebook never
-    grows. Disjoint dirs — overlapped driver jobs (guide §2.6)."""
-    _overlap_jobs(
-        lambda: compact_epoch_store(
-            spark,
-            os.path.join(index_dir, "vecs"),
-            through_epoch,
-            partition_col="cell",
-        ),
-        lambda: compact_union_versions(
-            spark, os.path.join(index_dir, "pairs"), through_epoch
-        ),
-    )
+    """Compact the streaming cluster-blocked SemDeDup index
+    (:func:`semdedup_clustered_foreach_batch`, stores in
+    :func:`_semdedup_clustered_stores`). Same committed-epochs-only
+    safety contract as every compactor here; the frozen codebook never
+    grows."""
+    _compact_stores(spark, _semdedup_clustered_stores(index_dir), through_epoch)
 
 
 # --- streaming decontamination gate -------------------------------------------
@@ -2279,6 +2269,28 @@ def _prior_versions(spark, root: str, before_epoch: int):
 # --- streaming entity resolution ---------------------------------------------
 
 
+def _er_stores(index_dir: str) -> list:
+    # records: append-only set, Hive-partitioned by block-hash bucket so
+    # the SNM recompute reads only touched buckets; ssj_*: append-only
+    # prefix-Jaccard indexes; snm_*: unions whose rows carry their
+    # epoch (the last-writer-wins reads key on that column)
+    return [
+        EpochStore(
+            os.path.join(index_dir, "records"), "epoch", partition_col="blk_bucket"
+        ),
+        *(
+            EpochStore(os.path.join(index_dir, sub), "union")
+            for sub in (
+                "ssj_prefix",
+                "ssj_shingles",
+                "ssj_pairs",
+                "snm_pairs",
+                "snm_touched",
+            )
+        ),
+    ]
+
+
 def er_index_foreach_batch(
     index_dir: str,
     col: str = "text",
@@ -2343,19 +2355,13 @@ def er_index_foreach_batch(
         target_bucket_rows=target_bucket_rows,
         explicit=n_buckets,
     )
+    stores = _er_stores(index_dir)
+    records, ssj_prefix, ssj_shingles = stores[:3]
 
     def stage(batch_df: DataFrame, epoch_id: int) -> None:
         # refuse a replay of an epoch already folded by the store's
         # compactor (ADVICE r10 — silent folded-history overwrite)
-        guard_uncompacted_epoch(
-            epoch_id,
-            os.path.join(index_dir, "records"),
-            os.path.join(index_dir, "ssj_prefix"),
-            os.path.join(index_dir, "ssj_shingles"),
-            os.path.join(index_dir, "ssj_pairs"),
-            os.path.join(index_dir, "snm_pairs"),
-            os.path.join(index_dir, "snm_touched"),
-        )
+        guard_uncompacted_epoch(epoch_id, *(s.root for s in stores))
         spark = batch_df.sparkSession
         norm = F.lower(F.trim(F.col(col)))
         recs = batch_df.select(
@@ -2411,9 +2417,7 @@ def er_index_foreach_batch(
         # parquet roundtrips are exact; new-new pairs still come from
         # the current side) and frees ALL the epoch's writes to overlap
         # at the end of the stage (guide §2.6).
-        prior_prefix = _prior_versions(
-            spark, os.path.join(index_dir, "ssj_prefix"), epoch_id
-        )
+        prior_prefix = ssj_prefix.prior(spark, epoch_id)
         all_prefix = (
             prefix
             if prior_prefix is None
@@ -2452,9 +2456,7 @@ def er_index_foreach_batch(
             )
             .dropDuplicates(["id_a", "id_b"])
         )
-        prior_sh = _prior_versions(
-            spark, os.path.join(index_dir, "ssj_shingles"), epoch_id
-        )
+        prior_sh = ssj_shingles.prior(spark, epoch_id)
         cur_sh = base.select("id", "shingles")
         sh = cur_sh if prior_sh is None else prior_sh.unionByName(cur_sh)
         verified = (
@@ -2477,20 +2479,14 @@ def er_index_foreach_batch(
         touched = recs.select("blk").distinct()
         # accumulated records = PRIOR epochs (disk, touched-bucket
         # pruned) + current batch (memory) — same memory-union move as
-        # the prefix channel; the epoch filter also makes the read
-        # independent of a concurrently-committing records/epoch=E dir
-        rec_root = os.path.join(index_dir, "records")
-        if fsutil.has_parquet_files(rec_root):
-            prior_recs = (
-                read_store(spark, rec_root)
-                .filter(F.col("epoch") < int(epoch_id))
-                .select("id", "text", "blk", "blk_bucket")
-            )
-            all_recs = prior_recs.unionByName(
-                recs.select("id", "text", "blk", "blk_bucket")
-            )
-        else:
-            all_recs = recs.select("id", "text", "blk", "blk_bucket")
+        # the prefix channel; prior() reads only epochs < E, so the
+        # read is independent of a concurrently-committing epoch=E dir
+        all_recs = recs.select("id", "text", "blk", "blk_bucket")
+        prior_recs = records.prior(spark, epoch_id)
+        if prior_recs is not None:
+            all_recs = prior_recs.select(
+                "id", "text", "blk", "blk_bucket"
+            ).unionByName(all_recs)
         all_recs = bucket_prune(all_recs, "blk_bucket", buckets)
         in_touched = all_recs.join(F.broadcast(touched), "blk")
         snm = sorted_neighborhood_pairs(
@@ -2512,50 +2508,18 @@ def er_index_foreach_batch(
         # above union the in-memory current frames) — run them as
         # overlapped driver jobs (guide §2.6); all inputs are pinned in
         # cache, so the concurrent jobs share, not recompute
-        def _w_records():
-            # records land HIVE-PARTITIONED (epoch=E/blk_bucket=B): the
-            # SNM channel reads ONLY touched buckets via directory
-            # pruning. repartition on the partition key: a partitionBy
-            # write from T shuffle tasks over B bucket values commits
-            # up to T x B tiny files per epoch (measured 2 KB/file,
-            # ~70% of the epoch's wall time — VERDICT r8 #4)
-            recs.repartition("blk_bucket").write.partitionBy(
-                "blk_bucket"
-            ).mode("overwrite").parquet(
-                os.path.join(rec_root, f"epoch={int(epoch_id)}")
-            )
-
-        def _w_prefix():
-            prefix.write.mode("overwrite").parquet(
-                os.path.join(index_dir, "ssj_prefix", f"v{epoch_id}")
-            )
-
-        def _w_shingles():
-            cur_sh.write.mode("overwrite").parquet(
-                os.path.join(index_dir, "ssj_shingles", f"v{epoch_id}")
-            )
-
-        def _w_pairs():
-            verified.write.mode("overwrite").parquet(
-                os.path.join(index_dir, "ssj_pairs", f"v{epoch_id}")
-            )
-
-        def _w_snm():
-            snm_tagged.withColumn(
-                "epoch", F.lit(int(epoch_id))
-            ).write.mode("overwrite").parquet(
-                os.path.join(index_dir, "snm_pairs", f"v{epoch_id}")
-            )
-
-        def _w_touched():
-            touched.withColumn(
-                "epoch", F.lit(int(epoch_id))
-            ).write.mode("overwrite").parquet(
-                os.path.join(index_dir, "snm_touched", f"v{epoch_id}")
-            )
-
-        _overlap_jobs(
-            _w_records, _w_prefix, _w_shingles, _w_pairs, _w_snm, _w_touched
+        epoch = F.lit(int(epoch_id))
+        _write_stores(
+            stores,
+            [
+                recs,
+                prefix,
+                cur_sh,
+                verified,
+                snm_tagged.withColumn("epoch", epoch),
+                touched.withColumn("epoch", epoch),
+            ],
+            epoch_id,
         )
         recs.unpersist()
         base.unpersist()
@@ -2592,6 +2556,14 @@ def er_current_entities(spark, index_dir: str) -> DataFrame:
     )
 
 
+def _pagerank_stores(state_dir: str) -> list:
+    # union edge log + latest-only rank snapshots
+    return [
+        EpochStore(os.path.join(state_dir, "edges"), "union"),
+        EpochStore(os.path.join(state_dir, "ranks"), "latest"),
+    ]
+
+
 def pagerank_foreach_batch(
     state_dir: str,
     iters_per_epoch: int = 2,
@@ -2625,15 +2597,14 @@ def pagerank_foreach_batch(
     """
     from rapids_and_rivers_spark.operators.graph import pagerank
 
+    stores = _pagerank_stores(state_dir)
+    edge_store, rank_store = stores
+
     def stage(batch_df: DataFrame, epoch_id: int) -> None:
         # refuse a replay of an epoch already folded by the store's
         # compactor (ADVICE r10 — silent folded-history overwrite)
-        guard_uncompacted_epoch(
-            epoch_id,
-            os.path.join(state_dir, "edges"),
-        )
+        guard_uncompacted_epoch(epoch_id, *(s.root for s in stores))
         spark = batch_df.sparkSession
-        epath = os.path.join(state_dir, "edges")
         # persist + pin the batch projection; accumulated edges = PRIOR
         # versions (explicit multi-path read) + the in-memory batch, so
         # the edge-log write and the rank compute+write overlap (guide
@@ -2648,25 +2619,15 @@ def pagerank_foreach_batch(
             F.col(weight).cast("double").alias("weight"),
         ).persist()
         ew.count()
-        prior = _prior_versions(spark, epath, epoch_id)
+        prior = edge_store.prior(spark, epoch_id)
         edges = ew if prior is None else prior.unionByName(ew)
-        prev = _latest_version(state_dir, "ranks", before_epoch=epoch_id)
-        init = spark.read.parquet(prev) if prev else None
         ranks = pagerank(
-            edges, iters=iters_per_epoch, damping=damping, init_ranks=init
+            edges,
+            iters=iters_per_epoch,
+            damping=damping,
+            init_ranks=rank_store.prior(spark, epoch_id),
         )
-
-        def _w_edges():
-            ew.write.mode("overwrite").parquet(
-                os.path.join(epath, f"v{epoch_id}")
-            )
-
-        def _w_ranks():
-            ranks.write.mode("overwrite").parquet(
-                os.path.join(state_dir, "ranks", f"v{epoch_id}")
-            )
-
-        _overlap_jobs(_w_edges, _w_ranks)
+        _write_stores(stores, [ew, ranks], epoch_id)
         ew.unpersist()
 
     return stage
@@ -2753,6 +2714,14 @@ def quantile_sample_stream(
 # --- streaming graph duals: label propagation, triangles, k-core -------------
 
 
+def _label_prop_stores(state_dir: str) -> list:
+    # union edge log + latest-only label snapshots
+    return [
+        EpochStore(os.path.join(state_dir, "edges"), "union"),
+        EpochStore(os.path.join(state_dir, "labels"), "latest"),
+    ]
+
+
 def label_prop_foreach_batch(
     state_dir: str,
     iters_per_epoch: int = 2,
@@ -2782,15 +2751,14 @@ def label_prop_foreach_batch(
     """
     from rapids_and_rivers_spark.operators.graph import label_propagation
 
+    stores = _label_prop_stores(state_dir)
+    edge_store, label_store = stores
+
     def stage(batch_df: DataFrame, epoch_id: int) -> None:
         # refuse a replay of an epoch already folded by the store's
         # compactor (ADVICE r10 — silent folded-history overwrite)
-        guard_uncompacted_epoch(
-            epoch_id,
-            os.path.join(state_dir, "edges"),
-        )
+        guard_uncompacted_epoch(epoch_id, *(s.root for s in stores))
         spark = batch_df.sparkSession
-        epath = os.path.join(state_dir, "edges")
         # the pagerank_foreach_batch shape: pin the batch, union prior
         # versions in memory, overlap the two writes (guide §2.6);
         # explicit version paths remove the stale-listing hazard the
@@ -2801,25 +2769,14 @@ def label_prop_foreach_batch(
             F.col(weight).cast("double").alias("weight"),
         ).persist()
         ew.count()
-        prior = _prior_versions(spark, epath, epoch_id)
+        prior = edge_store.prior(spark, epoch_id)
         edges = ew if prior is None else prior.unionByName(ew)
-        prev = _latest_version(state_dir, "labels", before_epoch=epoch_id)
-        init = spark.read.parquet(prev) if prev else None
         labels = label_propagation(
-            edges, iters=iters_per_epoch, init_labels=init
+            edges,
+            iters=iters_per_epoch,
+            init_labels=label_store.prior(spark, epoch_id),
         )
-
-        def _w_edges():
-            ew.write.mode("overwrite").parquet(
-                os.path.join(epath, f"v{epoch_id}")
-            )
-
-        def _w_labels():
-            labels.write.mode("overwrite").parquet(
-                os.path.join(state_dir, "labels", f"v{epoch_id}")
-            )
-
-        _overlap_jobs(_w_edges, _w_labels)
+        _write_stores(stores, [ew, labels], epoch_id)
         ew.unpersist()
 
     return stage
@@ -2832,6 +2789,17 @@ def read_latest_labels(spark, state_dir: str) -> DataFrame:
     if p is None:
         raise FileNotFoundError(f"no label snapshots under {state_dir}/labels")
     return spark.read.parquet(p)
+
+
+def _triangles_stores(state_dir: str) -> list:
+    # canonical edges by a-bucket (``epoch`` of folded rows stays below
+    # any later epoch's ``epoch <`` delta anti-join), adjacency by
+    # u-bucket, and latest-only count snapshots
+    return [
+        EpochStore(os.path.join(state_dir, "edges"), "epoch", partition_col="abkt"),
+        EpochStore(os.path.join(state_dir, "adj"), "epoch", partition_col="ubkt"),
+        EpochStore(os.path.join(state_dir, "counts"), "latest"),
+    ]
 
 
 def triangles_foreach_batch(
@@ -2886,18 +2854,14 @@ def triangles_foreach_batch(
         target_bucket_rows=target_bucket_rows,
         explicit=n_buckets,
     )
+    stores = _triangles_stores(state_dir)
+    edge_store, adj_store, count_store = stores
 
     def stage(batch_df: DataFrame, epoch_id: int) -> None:
         # refuse a replay of an epoch already folded by the store's
         # compactor (ADVICE r10 — silent folded-history overwrite)
-        guard_uncompacted_epoch(
-            epoch_id,
-            os.path.join(state_dir, "edges"),
-            os.path.join(state_dir, "adj"),
-        )
+        guard_uncompacted_epoch(epoch_id, *(s.root for s in stores))
         spark = batch_df.sparkSession
-        epath = os.path.join(state_dir, "edges")
-        apath = os.path.join(state_dir, "adj")
         canon = (
             batch_df.select(
                 F.least(F.col(src), F.col(dst)).alias("a"),
@@ -2914,11 +2878,7 @@ def triangles_foreach_batch(
         # (The epoch=E edge write itself is deferred to the overlapped
         # write pool at the end of the stage: the anti-join below only
         # reads epochs < E, so nothing in the epoch depends on it.)
-        all_canon = (
-            read_store(spark, epath)
-            if fsutil.has_parquet_files(epath)
-            else None
-        )
+        earlier = edge_store.prior(spark, epoch_id)
         # ONE bucket-id collect per epoch serving BOTH prunes (was two
         # driver round-trips): side 0 rows are the delta edges'
         # a-buckets (the anti-join prune below); the union of both
@@ -2956,14 +2916,10 @@ def triangles_foreach_batch(
         # earlier set). The anti-join's earlier side prunes to the
         # delta edges' a-buckets.
         new_abkts = [r.bkt for r in side_bkts if r.side == 0]
-        if all_canon is None:
+        if earlier is None:
             delta = canon.persist()
         else:
-            earlier = bucket_prune(
-                all_canon.filter(F.col("epoch") < int(epoch_id)),
-                "abkt",
-                new_abkts,
-            ).select("a", "b")
+            earlier = bucket_prune(earlier, "abkt", new_abkts).select("a", "b")
             delta = canon.join(earlier, ["a", "b"], "left_anti").persist()
         # pin delta before its three concurrent consumers (adj write,
         # triangle closure, degree delta) — a cold persist races and
@@ -2981,18 +2937,13 @@ def triangles_foreach_batch(
         # the delta endpoints' buckets. Accumulated adjacency = PRIOR
         # epochs (disk, pruned) + adj_new (memory) — row-identical to
         # the old write-then-read-back (string/long parquet roundtrips
-        # are exact), with the epoch < E filter making the read
-        # independent of a concurrently-committing epoch=E dir.
+        # are exact), with prior() reading only epochs < E — independent
+        # of a concurrently-committing epoch=E dir.
         touched = sorted({r.bkt for r in side_bkts})
-        if fsutil.has_parquet_files(apath):
+        prior_adj = adj_store.prior(spark, epoch_id)
+        if prior_adj is not None:
             adj = (
-                bucket_prune(
-                    read_store(spark, apath).filter(
-                        F.col("epoch") < int(epoch_id)
-                    ),
-                    "ubkt",
-                    touched,
-                )
+                bucket_prune(prior_adj, "ubkt", touched)
                 .select("u", "v")
                 .unionByName(adj_new)
             )
@@ -3024,10 +2975,8 @@ def triangles_foreach_batch(
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("d_deg"))
         )
-        prev = _latest_version(state_dir, "counts", before_epoch=epoch_id)
-        if prev:
-            base = spark.read.parquet(prev)
-        else:
+        base = count_store.prior(spark, epoch_id)
+        if base is None:
             # node type inherited from the data, not hardcoded
             base = d_deg.select(
                 "node", F.lit(0).alias("deg"), F.lit(0).alias("tri")
@@ -3050,27 +2999,15 @@ def triangles_foreach_batch(
         # the epoch's three store writes are mutually independent now
         # (every read above unions the in-memory frames) — overlapped
         # driver jobs (guide §2.6); canon and delta are pinned in cache
-        def _w_edges():
-            canon.withColumn(
-                "abkt", F.pmod(F.xxhash64("a"), F.lit(n_buckets))
-            ).repartition("abkt").write.partitionBy("abkt").mode(
-                "overwrite"
-            ).parquet(os.path.join(epath, f"epoch={int(epoch_id)}"))
-
-        def _w_adj():
-            # repartition: the T x B tiny-file commit fix
-            adj_new.withColumn(
-                "ubkt", F.pmod(F.xxhash64("u"), F.lit(n_buckets))
-            ).repartition("ubkt").write.partitionBy("ubkt").mode(
-                "overwrite"
-            ).parquet(os.path.join(apath, f"epoch={int(epoch_id)}"))
-
-        def _w_counts():
-            merged.write.mode("overwrite").parquet(
-                os.path.join(state_dir, "counts", f"v{epoch_id}")
-            )
-
-        _overlap_jobs(_w_edges, _w_adj, _w_counts)
+        _write_stores(
+            stores,
+            [
+                canon.withColumn("abkt", F.pmod(F.xxhash64("a"), F.lit(n_buckets))),
+                adj_new.withColumn("ubkt", F.pmod(F.xxhash64("u"), F.lit(n_buckets))),
+                merged,
+            ],
+            epoch_id,
+        )
         delta.unpersist()
         canon.unpersist()
 
@@ -3084,6 +3021,14 @@ def read_latest_tricounts(spark, state_dir: str) -> DataFrame:
     if p is None:
         raise FileNotFoundError(f"no count snapshots under {state_dir}/counts")
     return spark.read.parquet(p)
+
+
+def _kcore_stores(state_dir: str) -> list:
+    # union edge log + latest-only core snapshots
+    return [
+        EpochStore(os.path.join(state_dir, "edges"), "union"),
+        EpochStore(os.path.join(state_dir, "core"), "latest"),
+    ]
 
 
 def kcore_foreach_batch(
@@ -3114,15 +3059,13 @@ def kcore_foreach_batch(
     """
     from rapids_and_rivers_spark.operators.graph import kcore_peel
 
+    stores = _kcore_stores(state_dir)
+
     def stage(batch_df: DataFrame, epoch_id: int) -> None:
         # refuse a replay of an epoch already folded by the store's
         # compactor (ADVICE r10 — silent folded-history overwrite)
-        guard_uncompacted_epoch(
-            epoch_id,
-            os.path.join(state_dir, "edges"),
-        )
+        guard_uncompacted_epoch(epoch_id, *(s.root for s in stores))
         spark = batch_df.sparkSession
-        epath = os.path.join(state_dir, "edges")
         # persist + pin: canon feeds both the edge-log write and the
         # peel; accumulated edges = PRIOR versions (disk) + canon
         # (memory), so the write no longer serializes the epoch — the
@@ -3140,7 +3083,7 @@ def kcore_foreach_batch(
             .persist()
         )
         canon.count()
-        prior = _prior_versions(spark, epath, epoch_id)
+        prior = stores[0].prior(spark, epoch_id)
         und = (
             canon if prior is None else prior.unionByName(canon)
         ).distinct()
@@ -3148,18 +3091,7 @@ def kcore_foreach_batch(
             F.col("a").alias("src"), F.col("b").alias("dst")
         ).unionByName(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         survivors = kcore_peel(both, k=k, rounds=rounds)
-
-        def _w_edges():
-            canon.write.mode("overwrite").parquet(
-                os.path.join(epath, f"v{epoch_id}")
-            )
-
-        def _w_core():
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(state_dir, "core", f"v{epoch_id}")
-            )
-
-        _overlap_jobs(_w_edges, _w_core)
+        _write_stores(stores, [canon, survivors], epoch_id)
         canon.unpersist()
 
     return stage
@@ -3669,6 +3601,13 @@ def mix_from_stats(spark, out_dir: str, tau: float = 0.7) -> DataFrame:
     return mix_weights(merged, tau=tau)
 
 
+def _ivf_stores(index_dir: str) -> list:
+    # append-only postings whose readers prune on the cell directory key
+    return [
+        EpochStore(os.path.join(index_dir, "postings"), "epoch", partition_col="cell")
+    ]
+
+
 def ivf_index_foreach_batch(
     index_dir: str,
     dim: int,
@@ -3725,14 +3664,12 @@ def ivf_index_foreach_batch(
     # reloads once from the committed store — same values by the
     # freeze/replay-stability argument in the docstring.
     cents_cache: list = []
+    stores = _ivf_stores(index_dir)
 
     def stage(batch_df: DataFrame, epoch_id: int) -> None:
         # refuse a replay of an epoch already folded by the store's
         # compactor (ADVICE r10 — silent folded-history overwrite)
-        guard_uncompacted_epoch(
-            epoch_id,
-            os.path.join(index_dir, "postings"),
-        )
+        guard_uncompacted_epoch(epoch_id, *(s.root for s in stores))
         spark = batch_df.sparkSession
         cb_dir = os.path.join(index_dir, "codebook")
         # freeze-gate on the committer's _SUCCESS marker, not bare dir
@@ -3760,11 +3697,11 @@ def ivf_index_foreach_batch(
                 codebook_from_table(spark.read.parquet(cb_dir))
             )
         cents = cents_cache[0]
-        epoch_dir = os.path.join(index_dir, "postings", f"epoch={int(epoch_id)}")
-        assign_cells(batch_df, cents, emb_col=emb_col).select(
-            cand_id, emb_col, "cell"
-        ).repartition("cell").write.partitionBy("cell").mode("overwrite").parquet(
-            epoch_dir
+        epoch_dir = stores[0].write(
+            assign_cells(batch_df, cents, emb_col=emb_col).select(
+                cand_id, emb_col, "cell"
+            ),
+            epoch_id,
         )
         # >2x corpus-outgrowth re-cluster event, detectable (VERDICT r11
         # #9) — driver-side footer metadata, no extra job
@@ -3940,6 +3877,20 @@ def stump_from_stats(spark, out_dir: str, top_k: int = 10) -> DataFrame:
     return best_stump(stats, top_k=top_k)
 
 
+def _assoc_stores(store_dir: str) -> list:
+    # bucket-partitioned distinct memberships (append-only set) and the
+    # pair-count deltas (mergeable integer sums)
+    return [
+        EpochStore(os.path.join(store_dir, "items"), "epoch", partition_col="bkt"),
+        EpochStore(
+            os.path.join(store_dir, "pair_delta"),
+            "sum",
+            keys=["ia", "ib"],
+            sum_col="c_ab",
+        ),
+    ]
+
+
 def assoc_items_foreach_batch(
     store_dir: str,
     basket_col: str = "basket",
@@ -3985,15 +3936,12 @@ def assoc_items_foreach_batch(
         # whenever the caller passes an estimate — ADVICE r9 doc rule
         floor=64,
     )
+    stores = _assoc_stores(store_dir)
 
     def stage(batch_df: DataFrame, epoch_id: int) -> None:
         # refuse a replay of an epoch already folded by the store's
         # compactor (ADVICE r10 — silent folded-history overwrite)
-        guard_uncompacted_epoch(
-            epoch_id,
-            os.path.join(store_dir, "items"),
-            os.path.join(store_dir, "pair_delta"),
-        )
+        guard_uncompacted_epoch(epoch_id, *(s.root for s in stores))
         spark = batch_df.sparkSession
         epoch = int(epoch_id)
         bi = (
@@ -4010,22 +3958,13 @@ def assoc_items_foreach_batch(
         # collect, the anti-join and the within-epoch pair join; the
         # distinct shuffle would otherwise re-run per consumer.
         # Unpersisted after the epoch's writes.
-        items_root = os.path.join(store_dir, "items")
-
-        # probe through the Hadoop FileSystem API, matching the path
-        # scheme of store_dir — os.walk on an S3/HDFS store silently
-        # reports "absent", skipping the anti-join and double-counting
-        # replayed memberships (ADVICE r8)
-        if epoch > 0 and fsutil.has_parquet_files(items_root):
+        prior = stores[0].prior(spark, epoch) if epoch > 0 else None
+        if prior is not None:
             # bounded-collect: touched-bucket prune — <= min(n_buckets,
             # |batch baskets|) distinct bucket ints (the er_index bkt_rows
             # class), fed to a directory-pruned store read
             bkts = [r["bkt"] for r in bi.select("bkt").distinct().collect()]
-            prior = (
-                read_store(spark, items_root)
-                .filter((F.col("epoch") < epoch) & F.col("bkt").isin(bkts))
-                .select("basket", "item")
-            )
+            prior = prior.filter(F.col("bkt").isin(bkts)).select("basket", "item")
             new = bi.join(prior, ["basket", "item"], "left_anti").persist()
             # persist-scope: in-function — unpersisted after the epoch's
             # writes below
@@ -4060,25 +3999,18 @@ def assoc_items_foreach_batch(
         # persist races and both writers would recompute the anti-join
         new.count()
 
-        def _w_pairs():
-            delta.groupBy("ia", "ib").agg(
-                F.count(F.lit(1)).cast("long").alias("c_ab")
-            ).write.mode("overwrite").parquet(
-                os.path.join(store_dir, "pair_delta", f"v{epoch}")
-            )
-
-        def _w_items():
-            # repartition: the T x B tiny-file commit fix (measured 20 s
-            # of this stage's 46 s at sf0.1 was the two items writes)
-            new.select("basket", "item", "bkt").repartition(
-                "bkt"
-            ).write.partitionBy("bkt").mode("overwrite").parquet(
-                os.path.join(items_root, f"epoch={epoch}")
-            )
-
         # the two store writes consume only pinned frames and prior
         # epochs — overlapped driver jobs (guide §2.6)
-        _overlap_jobs(_w_pairs, _w_items)
+        _write_stores(
+            stores,
+            [
+                new.select("basket", "item", "bkt"),
+                delta.groupBy("ia", "ib").agg(
+                    F.count(F.lit(1)).cast("long").alias("c_ab")
+                ),
+            ],
+            epoch,
+        )
         new.unpersist()
         bi.unpersist()
 
@@ -4328,7 +4260,27 @@ def record_codebook_corpus(
         )
 
 
-# --- epoch-store compaction --------------------------------------------------
+# --- epoch stores and their compaction ---------------------------------------
+#
+# The compactable duals keep their state in epoch-versioned stores, each an
+# :class:`EpochStore` of one of four kinds:
+#
+# - ``"epoch"``: Hive ``epoch=E/<partition_col>=B`` append-only row sets,
+#   read back with an ``epoch < E`` filter; compaction folds epochs <= E
+#   into one ``epoch=E`` dir and keeps the partition layout;
+# - ``"union"``: ``v{E}`` append-only union logs, read back as the union of
+#   the versions below E; compaction folds them into one ``v{E}``;
+# - ``"sum"``: ``v{E}`` mergeable-delta stores of keyed integer sums;
+#   compaction re-sums the folded versions into one ``v{E}``;
+# - ``"latest"``: ``v{E}`` latest-only snapshots, read back as the newest
+#   version below E; compaction prunes every older snapshot.
+#
+# Each dual declares its stores once, in a module-level ``_<dual>_stores``
+# list. Its stage guards every root of that list against a folded-epoch
+# replay, writes and reads prior state through the stores, and its
+# ``*_compact_store`` compactor runs ``EpochStore.compact`` over the same
+# list as overlapped driver jobs. Every compaction writes the store's
+# watermark manifest once its fold completes.
 
 #: compaction watermark manifest, written at each compacted store root
 #: AFTER its fold completes. ``_``-prefixed so Spark's directory readers
@@ -4446,6 +4398,117 @@ def auto_compacting(
     return wrapped
 
 
+class EpochStore:
+    """One epoch-versioned store of a streaming dual: its ``root`` and its
+    ``kind`` (``"epoch"``, ``"union"``, ``"sum"`` or ``"latest"``, see
+    the section comment above). ``partition_col`` is the bucket column
+    of an ``"epoch"`` store; ``keys`` and ``sum_col`` are the merge key
+    and summed column of a ``"sum"`` store."""
+
+    _KINDS = ("epoch", "union", "sum", "latest")
+
+    def __init__(
+        self,
+        root: str,
+        kind: str,
+        partition_col: str | None = None,
+        keys: list | None = None,
+        sum_col: str | None = None,
+    ):
+        if kind not in self._KINDS:
+            raise ValueError(f"unknown epoch-store kind {kind!r}")
+        self.root = root
+        self.kind = kind
+        self.partition_col = partition_col
+        self.keys = keys
+        self.sum_col = sum_col
+
+    def write(self, df: DataFrame, epoch_id: int) -> str:
+        """Overwrite epoch ``epoch_id``'s dir with ``df`` (so an
+        at-least-once replay rewrites its own dir) and return its path.
+        An ``"epoch"`` store repartitions on its partition column first:
+        a partitionBy write from T shuffle tasks over B bucket values
+        commits up to T x B tiny files per epoch (measured 2 KB/file,
+        ~70% of the ER epoch's wall time — VERDICT r8 #4)."""
+        if self.kind == "epoch":
+            path = os.path.join(self.root, f"epoch={int(epoch_id)}")
+            df.repartition(self.partition_col).write.partitionBy(
+                self.partition_col
+            ).mode("overwrite").parquet(path)
+        else:
+            path = os.path.join(self.root, f"v{int(epoch_id)}")
+            df.write.mode("overwrite").parquet(path)
+        return path
+
+    def prior(self, spark, epoch_id: int) -> DataFrame | None:
+        """The store's state strictly before epoch ``epoch_id`` — rows of
+        the earlier epochs (the newest earlier snapshot for a
+        ``"latest"`` store) — or ``None`` when there is none. Never
+        reads epoch ``epoch_id``'s own dir, so a replay sees the same
+        state whether or not its failed first attempt left one."""
+        if self.kind == "epoch":
+            if not fsutil.has_parquet_files(self.root):
+                return None
+            return read_store(spark, self.root).filter(
+                F.col("epoch") < int(epoch_id)
+            )
+        if self.kind == "latest":
+            p = _latest_version(*os.path.split(self.root), before_epoch=epoch_id)
+            return spark.read.parquet(p) if p else None
+        return _prior_versions(spark, self.root, epoch_id)
+
+    def compact(self, spark, through_epoch: int) -> None:
+        """Fold epochs <= ``through_epoch`` (see the section comment for
+        each kind), then record the store's watermark. Same
+        committed-epochs-only safety contract as
+        :func:`compact_epoch_store`."""
+        if self.kind == "epoch":
+            compact_epoch_store(
+                spark, self.root, through_epoch, partition_col=self.partition_col
+            )
+        elif self.kind == "sum":
+            compact_versioned_deltas(
+                spark, self.root, through_epoch, self.keys, self.sum_col
+            )
+        elif self.kind == "union":
+            # rows pass through unchanged, including an embedded ``epoch``
+            # column: the SNM last-writer-wins readers group on its
+            # values, not on the directory names, so folding the
+            # directories never changes which epoch wins
+            _compact_version_dirs(spark, self.root, through_epoch, lambda df: df)
+        else:
+            # latest-only snapshots: keep the newest version <= E — what
+            # any later epoch's prior() resolves to — and delete the
+            # rest. Pure deletes, resumable, no temp dir needed.
+            versions = sorted(
+                int(n[1:])
+                for n in fsutil.listdir(self.root)
+                if n.startswith("v")
+                and n[1:].isdigit()
+                and int(n[1:]) <= int(through_epoch)
+            )
+            for e in versions[:-1]:
+                fsutil.delete(os.path.join(self.root, f"v{e}"))
+            if versions:
+                _write_compaction_watermark(self.root, versions[-1])
+
+
+def _compact_stores(spark, stores: list, through_epoch: int) -> None:
+    """Compact every store of a dual. The stores live in disjoint
+    directories, so their folds run as overlapped driver jobs
+    (:func:`_overlap_jobs`, guide §2.6)."""
+    _overlap_jobs(*(partial(s.compact, spark, through_epoch) for s in stores))
+
+
+def _write_stores(stores: list, frames: list, epoch_id: int) -> None:
+    """Write each frame to its store as overlapped driver jobs — an
+    epoch's store writes read only pinned frames and earlier epochs, so
+    they are independent (guide §2.6)."""
+    _overlap_jobs(
+        *(partial(s.write, df, epoch_id) for s, df in zip(stores, frames, strict=True))
+    )
+
+
 def compact_epoch_store(
     spark,
     root: str,
@@ -4538,54 +4601,6 @@ def compact_versioned_deltas(
     _compact_version_dirs(spark, root, through_epoch, rebuild)
 
 
-def compact_union_versions(spark, root: str, through_epoch: int) -> None:
-    """Compact the ``v0..vE`` dirs of an append-only UNION store into
-    one ``v{E}`` holding the same rows — for stores whose readers are
-    ``read_epoch_table`` unions (minhash bands/shingles, ssj prefix/
-    shingle/pair indexes, kcore/pagerank edge logs). Rows pass through
-    unchanged, INCLUDING any embedded ``epoch`` column: the SNM
-    last-writer-wins readers group on that column's values, not on the
-    directory names, so folding the directories never changes which
-    epoch wins. Same temp-dir/_SUCCESS/resume discipline (including
-    the crash-after-delete recovery) and the same
-    committed-epochs-only safety contract as
-    :func:`compact_epoch_store`."""
-
-    def rebuild(df: DataFrame) -> DataFrame:
-        return df
-
-    _compact_version_dirs(spark, root, through_epoch, rebuild)
-
-
-def prune_versions(root: str, through_epoch: int) -> None:
-    """Prune a LATEST-ONLY snapshot store (``counts/v{E}``,
-    ``ranks/v{E}``, ``core/v{E}`` — stores read via
-    :func:`_latest_version`, never unioned): delete every version
-    strictly below the newest one <= ``through_epoch``. The kept
-    snapshot is exactly what any later epoch's ``before_epoch`` read
-    resolves to, so reads (and at-least-once replays of epochs above
-    the watermark) are unchanged. Pure deletes — trivially resumable,
-    no temp dir needed."""
-    from rapids_and_rivers_spark.streaming import fsutil
-
-    versions = sorted(
-        int(n[1:])
-        for n in fsutil.listdir(root)
-        if n.startswith("v")
-        and n[1:].isdigit()
-        and int(n[1:]) <= int(through_epoch)
-    )
-    for e in versions[:-1]:
-        fsutil.delete(os.path.join(root, f"v{e}"))
-    if versions:
-        # latest-only stores: replaying a pruned epoch re-writes an OLD
-        # v-dir that _latest_version would rightly ignore — harmless for
-        # reads, but record the watermark anyway so the ingest-stage
-        # guard (guard_uncompacted_epoch) keeps the contract symmetric
-        # across all three store shapes
-        _write_compaction_watermark(root, versions[-1])
-
-
 def _compact_version_dirs(spark, root, through_epoch, rebuild) -> None:
     """Shared v-dir compaction core: union versions <= E, apply
     ``rebuild`` (identity for union stores, keyed re-aggregation for
@@ -4663,168 +4678,63 @@ def _overlap_jobs(*thunks) -> None:
 
 
 def er_compact_store(spark, index_dir: str, through_epoch: int) -> None:
-    """Compact every channel of the streaming-ER index
-    (:func:`er_index_foreach_batch`) — the store the round-9 judge
-    named as still growing one directory per epoch forever:
-
-    - ``records/epoch=E/blk_bucket=B`` — append-only record set;
-      :func:`compact_epoch_store` keeps the blk_bucket layout so the
-      SNM touched-bucket pruning is untouched;
-    - ``ssj_prefix`` / ``ssj_shingles`` / ``ssj_pairs`` — append-only
-      union indexes (v-dirs);
-    - ``snm_pairs`` / ``snm_touched`` — union stores whose rows CARRY
-      their epoch (last-writer-wins reads key on the column, so the
-      fold is reader-invisible).
-
-    Same safety contract as every compactor here: ``through_epoch``
-    must be strictly below the stream's committed checkpoint. The six
-    channels live in disjoint directories, so their folds run as
-    overlapped driver jobs (:func:`_overlap_jobs`, guide §2.6)."""
-
-    def _records():
-        compact_epoch_store(
-            spark,
-            os.path.join(index_dir, "records"),
-            through_epoch,
-            partition_col="blk_bucket",
-        )
-
-    def _union(sub):
-        return lambda: compact_union_versions(
-            spark, os.path.join(index_dir, sub), through_epoch
-        )
-
-    _overlap_jobs(
-        _records,
-        *(
-            _union(sub)
-            for sub in (
-                "ssj_prefix",
-                "ssj_shingles",
-                "ssj_pairs",
-                "snm_pairs",
-                "snm_touched",
-            )
-        ),
-    )
+    """Compact every store of the streaming-ER index
+    (:func:`er_index_foreach_batch`, stores in :func:`_er_stores`) — the
+    store the round-9 judge named as still growing one directory per
+    epoch forever. Same safety contract as every compactor here:
+    ``through_epoch`` must be strictly below the stream's committed
+    checkpoint."""
+    _compact_stores(spark, _er_stores(index_dir), through_epoch)
 
 
 def triangles_compact_store(spark, state_dir: str, through_epoch: int) -> None:
     """Compact the streaming-triangle stores
-    (:func:`triangles_foreach_batch`): the two Hive-partitioned logs
-    keep their bucket layout (``edges`` by ``abkt`` — its compacted
-    rows take ``epoch=through_epoch``, still strictly below any
-    future epoch's ``epoch <`` delta anti-join; ``adj`` by ``ubkt``),
-    and the latest-only ``counts`` snapshots prune to one. The three
-    stores are disjoint directories — overlapped driver jobs
-    (guide §2.6)."""
-    _overlap_jobs(
-        lambda: compact_epoch_store(
-            spark, os.path.join(state_dir, "edges"), through_epoch,
-            partition_col="abkt",
-        ),
-        lambda: compact_epoch_store(
-            spark, os.path.join(state_dir, "adj"), through_epoch,
-            partition_col="ubkt",
-        ),
-        lambda: prune_versions(
-            os.path.join(state_dir, "counts"), through_epoch
-        ),
-    )
+    (:func:`triangles_foreach_batch`, stores in
+    :func:`_triangles_stores`)."""
+    _compact_stores(spark, _triangles_stores(state_dir), through_epoch)
 
 
 def kcore_compact_store(spark, state_dir: str, through_epoch: int) -> None:
-    """Compact the streaming k-core stores (:func:`kcore_foreach_batch`):
-    the edge log is a plain union store; ``core`` snapshots are
-    latest-only. Disjoint dirs — overlapped driver jobs (guide §2.6)."""
-    _overlap_jobs(
-        lambda: compact_union_versions(
-            spark, os.path.join(state_dir, "edges"), through_epoch
-        ),
-        lambda: prune_versions(os.path.join(state_dir, "core"), through_epoch),
-    )
+    """Compact the streaming k-core stores (:func:`kcore_foreach_batch`,
+    stores in :func:`_kcore_stores`)."""
+    _compact_stores(spark, _kcore_stores(state_dir), through_epoch)
 
 
 def pagerank_compact_store(spark, state_dir: str, through_epoch: int) -> None:
-    """Compact the daily-PageRank stores (:func:`pagerank_foreach_batch`):
-    union edge log + latest-only rank snapshots. Disjoint dirs —
-    overlapped driver jobs (guide §2.6)."""
-    _overlap_jobs(
-        lambda: compact_union_versions(
-            spark, os.path.join(state_dir, "edges"), through_epoch
-        ),
-        lambda: prune_versions(
-            os.path.join(state_dir, "ranks"), through_epoch
-        ),
-    )
+    """Compact the daily-PageRank stores (:func:`pagerank_foreach_batch`,
+    stores in :func:`_pagerank_stores`)."""
+    _compact_stores(spark, _pagerank_stores(state_dir), through_epoch)
 
 
 def label_prop_compact_store(spark, state_dir: str, through_epoch: int) -> None:
     """Compact the streaming label-propagation stores
-    (:func:`label_prop_foreach_batch`): union edge log + latest-only
-    label snapshots. Disjoint dirs — overlapped driver jobs
-    (guide §2.6)."""
-    _overlap_jobs(
-        lambda: compact_union_versions(
-            spark, os.path.join(state_dir, "edges"), through_epoch
-        ),
-        lambda: prune_versions(
-            os.path.join(state_dir, "labels"), through_epoch
-        ),
-    )
+    (:func:`label_prop_foreach_batch`, stores in
+    :func:`_label_prop_stores`)."""
+    _compact_stores(spark, _label_prop_stores(state_dir), through_epoch)
 
 
 def minhash_compact_store(
     spark, index_dir: str, pairs_dir: str, through_epoch: int
 ) -> None:
     """Compact the streaming MinHash-LSH index
-    (:func:`minhash_index_foreach_batch`): bands, shingles, and the
-    verified-pair output are all append-only union stores. Disjoint
-    dirs — overlapped driver jobs (guide §2.6)."""
-    _overlap_jobs(
-        lambda: compact_union_versions(
-            spark, os.path.join(index_dir, "bands"), through_epoch
-        ),
-        lambda: compact_union_versions(
-            spark, os.path.join(index_dir, "shingles"), through_epoch
-        ),
-        lambda: compact_union_versions(spark, pairs_dir, through_epoch),
-    )
+    (:func:`minhash_index_foreach_batch`, stores in
+    :func:`_minhash_stores`)."""
+    _compact_stores(spark, _minhash_stores(index_dir, pairs_dir), through_epoch)
 
 
 def ivf_compact_store(spark, index_dir: str, through_epoch: int) -> None:
     """Compact the streaming IVF postings
-    (:func:`ivf_index_foreach_batch`): ``postings/epoch=E/cell=C`` is
-    an append-only set whose readers prune on the ``cell`` directory
-    key — :func:`compact_epoch_store` preserves that layout. The
-    frozen codebook is a single dir and never grows."""
-    compact_epoch_store(
-        spark, os.path.join(index_dir, "postings"), through_epoch,
-        partition_col="cell",
-    )
+    (:func:`ivf_index_foreach_batch`, stores in :func:`_ivf_stores`).
+    The frozen codebook is a single dir and never grows."""
+    _compact_stores(spark, _ivf_stores(index_dir), through_epoch)
 
 
 def assoc_compact_store(spark, store_dir: str, through_epoch: int) -> None:
-    """Compact both halves of the association-rule store: the
-    bucket-partitioned membership rows (append-only set) and the
-    pair-count deltas (mergeable integer sums). The reader
-    (:func:`assoc_rules_from_store`) is contract-identical before and
-    after — pinned by test and by the stream_assoc_compacted catalog
-    oracle — and post-compaction ingest keeps working because compacted
-    memberships keep an ``epoch`` value strictly below any new epoch.
-    Disjoint dirs — overlapped driver jobs (guide §2.6)."""
-    _overlap_jobs(
-        lambda: compact_epoch_store(
-            spark,
-            os.path.join(store_dir, "items"),
-            through_epoch,
-            partition_col="bkt",
-        ),
-        lambda: compact_versioned_deltas(
-            spark,
-            os.path.join(store_dir, "pair_delta"),
-            through_epoch,
-            key_cols=["ia", "ib"],
-            sum_col="c_ab",
-        ),
-    )
+    """Compact both halves of the association-rule store
+    (:func:`assoc_items_foreach_batch`, stores in :func:`_assoc_stores`).
+    The reader (:func:`assoc_rules_from_store`) is contract-identical
+    before and after — pinned by test and by the stream_assoc_compacted
+    catalog oracle — and post-compaction ingest keeps working because
+    compacted memberships keep an ``epoch`` value strictly below any
+    new epoch."""
+    _compact_stores(spark, _assoc_stores(store_dir), through_epoch)

@@ -144,34 +144,52 @@ def read_text(path: str) -> str:
 
 
 def write_text(path: str, text: str) -> None:
+    """Replace the file at ``path`` with ``text`` atomically: the text
+    goes to a hidden ``.``-prefixed sibling first, which is then renamed
+    over ``path``, so a crash mid-write leaves the previous contents
+    (a manifest read back with ``json.loads``) intact."""
+    parent, name = os.path.split(path)
+    tmp = os.path.join(parent, f".{name}.tmp")
     h = _jfs(path)
     if h is None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
+        os.makedirs(parent, exist_ok=True)
+        with open(tmp, "w") as f:
             f.write(text)
+        os.replace(tmp, path)
         return
-    fs, jpath, _ = h
-    stream = fs.create(jpath, True)
+    fs, jpath, jvm = h
+    jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
+    stream = fs.create(jtmp, True)
     try:
         stream.write(bytearray(text.encode("utf-8")))
     finally:
         stream.close()
+    # FileSystem.rename never overwrites; FileContext's OVERWRITE does
+    from pyspark import SparkContext
+
+    opts = SparkContext._gateway.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
+    opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+    jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        fs.getUri(), fs.getConf()
+    ).rename(jtmp, jpath, opts)
 
 
 def delete(path: str) -> None:
-    """Recursive delete; no-op when the path does not exist."""
+    """Recursive delete; no-op when the path does not exist. Raises
+    when the path exists and cannot be deleted — a compaction must not
+    record its watermark beside a folded dir that is still there."""
     h = _jfs(path)
     if h is None:
         import shutil
 
         if os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
+            shutil.rmtree(path)
         elif os.path.exists(path):
             os.remove(path)
         return
     fs, jpath, _ = h
-    if fs.exists(jpath):
-        fs.delete(jpath, True)
+    if fs.exists(jpath) and not fs.delete(jpath, True):
+        raise IOError(f"delete failed: {path}")
 
 
 def rename(src: str, dst: str) -> None:

@@ -17,6 +17,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from rapids_and_rivers_spark.streaming import duals as D
+
 
 def _count_dirs(root, prefix):
     if not os.path.isdir(root):
@@ -397,31 +399,126 @@ def test_label_prop_compaction_invisible(spark):
 # --------------------------------------------------------------------------
 
 
-def test_compaction_watermark_refuses_folded_epoch_replay(spark):
-    from rapids_and_rivers_spark.streaming.duals import (
-        compaction_watermark,
-        kcore_compact_store,
-        kcore_foreach_batch,
-        read_latest_core,
-    )
+_RING_EPOCHS = ([(0, 1), (1, 2), (2, 3)], [(3, 4), (4, 5)], [(5, 0)])
 
-    ring = [(i, (i + 1) % 6) for i in range(6)]
-    out = tempfile.mkdtemp(prefix="rars_t_wmg_")
+
+def _ring_batch(weighted):
+    def batch(spark, e):
+        if weighted:
+            rows = [(a, b, 1.0) for a, b in _RING_EPOCHS[e]]
+            return spark.createDataFrame(rows, "src long, dst long, weight double")
+        return spark.createDataFrame(_RING_EPOCHS[e], "src long, dst long")
+
+    return batch
+
+
+def _vec_batch(id_col, emb_col):
+    def batch(spark, e):
+        import numpy as np
+
+        vecs = np.random.RandomState(7).randn(60, 64).round(3)
+        rows = [(i, [float(x) for x in vecs[i]]) for i in range(60) if i % 3 == e]
+        return spark.createDataFrame(
+            rows, f"{id_col} long, {emb_col} array<double>"
+        )
+
+    return batch
+
+
+_ER_EPOCHS = ({1, 3}, {2, 5}, {4, 6, 7})
+_BASKET_EPOCHS = (
+    [(1, 10), (1, 11), (2, 10)],
+    [(2, 11), (3, 12)],
+    [(3, 10), (1, 12)],
+)
+
+
+#: dual -> (stage factory over a state dir, its compactor, epoch batch)
+_GUARD_CASES = {
+    "minhash": (
+        lambda out: D.minhash_index_foreach_batch(
+            os.path.join(out, "idx"), os.path.join(out, "pairs"), threshold=0.3
+        ),
+        lambda sp, out, t: D.minhash_compact_store(
+            sp, os.path.join(out, "idx"), os.path.join(out, "pairs"), t
+        ),
+        lambda spark, e: _er_batch(spark, _ER_EPOCHS[e]),
+    ),
+    "semdedup_clustered": (
+        lambda out: D.semdedup_clustered_foreach_batch(
+            out, dim=64, n_cells=4, threshold=0.4, expected_corpus_rows=60
+        ),
+        D.semdedup_clustered_compact_store,
+        _vec_batch("vec_id", "embedding"),
+    ),
+    "er": (
+        D.er_index_foreach_batch,
+        D.er_compact_store,
+        lambda spark, e: _er_batch(spark, _ER_EPOCHS[e]),
+    ),
+    "pagerank": (
+        D.pagerank_foreach_batch,
+        D.pagerank_compact_store,
+        _ring_batch(weighted=True),
+    ),
+    "label_prop": (
+        D.label_prop_foreach_batch,
+        D.label_prop_compact_store,
+        _ring_batch(weighted=True),
+    ),
+    "triangles": (
+        lambda out: D.triangles_foreach_batch(out, expected_adj_rows=1000),
+        D.triangles_compact_store,
+        _ring_batch(weighted=False),
+    ),
+    "kcore": (
+        lambda out: D.kcore_foreach_batch(out, k=2, rounds=3),
+        D.kcore_compact_store,
+        _ring_batch(weighted=False),
+    ),
+    "ivf": (
+        lambda out: D.ivf_index_foreach_batch(
+            out, dim=64, n_cells=4, expected_corpus_rows=60
+        ),
+        D.ivf_compact_store,
+        _vec_batch("neighbor_id", "c_emb"),
+    ),
+    "assoc": (
+        D.assoc_items_foreach_batch,
+        D.assoc_compact_store,
+        lambda spark, e: spark.createDataFrame(
+            _BASKET_EPOCHS[e], "basket long, item long"
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("dual", list(_GUARD_CASES))
+def test_compaction_watermark_refuses_folded_epoch_replay(spark, dual):
+    import glob
+
+    make_stage, compact, batch = _GUARD_CASES[dual]
+    out = tempfile.mkdtemp(prefix=f"rars_t_wmg_{dual}_")
     try:
-        stage = kcore_foreach_batch(out, k=2, rounds=3)
-        stage(spark.createDataFrame(ring[:3], "src long, dst long"), 0)
-        stage(spark.createDataFrame(ring[3:5], "src long, dst long"), 1)
-        kcore_compact_store(spark, out, through_epoch=1)
-        assert compaction_watermark(os.path.join(out, "edges")) == 1
+        stage = make_stage(out)
+        stage(batch(spark, 0), 0)
+        stage(batch(spark, 1), 1)
+        compact(spark, out, 1)
+        marks = glob.glob(
+            os.path.join(out, "**", D._WATERMARK_FILE), recursive=True
+        )
+        roots = [os.path.dirname(m) for m in marks]
+        assert roots and all(D.compaction_watermark(r) == 1 for r in roots)
         # contract-violating replay of folded epoch 1: must raise, and
-        # must NOT touch the compacted edge log
-        import pytest
-
+        # must NOT touch the compacted stores
         with pytest.raises(RuntimeError, match="compacted through epoch 1"):
-            stage(spark.createDataFrame(ring[3:5], "src long, dst long"), 1)
-        # the legitimate next epoch still ingests fine
-        stage(spark.createDataFrame(ring[5:], "src long, dst long"), 2)
-        assert read_latest_core(spark, out).count() == 6
+            stage(batch(spark, 1), 1)
+        # the legitimate next epoch still ingests into every store
+        stage(batch(spark, 2), 2)
+        for r in roots:
+            assert {"v2", "epoch=2"} & set(os.listdir(r)), r
+        if dual == "kcore":
+            assert D.read_latest_core(spark, out).count() == 6
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -586,3 +683,70 @@ def test_has_parquet_files_ignores_hidden_paths_hadoop_fs(spark, tmp_path):
     part.mkdir(parents=True)
     (part / "part-0.parquet").touch()
     assert fsutil.has_parquet_files(root)
+
+
+class _StuckV0FileSystem:
+    """A Hadoop FileSystem whose delete of any ``v0`` reports failure."""
+
+    def __init__(self, fs):
+        self._fs = fs
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def delete(self, jpath, recursive):
+        return jpath.getName() != "v0" and self._fs.delete(jpath, recursive)
+
+
+@pytest.mark.parametrize("branch", ["stdlib", "hadoop_fs"])
+def test_union_compaction_raises_when_folded_dir_delete_fails(
+    spark, monkeypatch, tmp_path, branch
+):
+    from rapids_and_rivers_spark.streaming import fsutil
+
+    root = str(tmp_path / "edges")
+    store = D.EpochStore(root, "union")
+    for e in (0, 1):
+        store.write(spark.createDataFrame([(e, e + 1)], "a long, b long"), e)
+    stuck = os.path.join(root, "v0")
+    if branch == "stdlib":
+        monkeypatch.setattr(fsutil, "_jfs", lambda path: None)
+        real_rmdir = os.rmdir
+
+        def rmdir(path, *args, **kwargs):
+            if os.fspath(path) == stuck:
+                raise PermissionError(13, "injected", path)
+            return real_rmdir(path, *args, **kwargs)
+
+        monkeypatch.setattr(os, "rmdir", rmdir)
+    else:
+        real_jfs = fsutil._jfs
+
+        def jfs(path):
+            fs, jpath, jvm = real_jfs(path)
+            return _StuckV0FileSystem(fs), jpath, jvm
+
+        monkeypatch.setattr(fsutil, "_jfs", jfs)
+    with pytest.raises(OSError):
+        store.compact(spark, 1)
+    # the folded v0 is still there, so no watermark may claim the fold
+    assert os.path.isdir(stuck)
+    assert D.compaction_watermark(root) is None
+
+
+def test_manifest_write_failing_midway_keeps_previous_manifest(
+    monkeypatch, tmp_path
+):
+    from rapids_and_rivers_spark.streaming import fsutil
+
+    monkeypatch.setattr(fsutil, "_jfs", lambda path: None)
+    root = str(tmp_path / "store")
+    D._write_compaction_watermark(root, 1)
+    # a lone surrogate cannot be encoded: the write fails after the
+    # file it writes to is opened
+    with pytest.raises(UnicodeEncodeError):
+        fsutil.write_text(
+            os.path.join(root, D._WATERMARK_FILE),
+            '{"compacted_through": 2, "note": "\ud800"}',
+        )
+    assert D.compaction_watermark(root) == 1

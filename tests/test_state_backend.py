@@ -77,6 +77,23 @@ def test_build_session_defaults_to_rocksdb(spark):
     assert current_provider(spark) == ROCKSDB_PROVIDER
 
 
+def test_driver_memory_default_fits_physical_ram(monkeypatch):
+    from rapids_and_rivers_spark import session
+
+    page = 4096
+
+    def ram(gib):
+        pages = {"SC_PHYS_PAGES": (gib << 30) // page, "SC_PAGE_SIZE": page}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+
+    ram(15)
+    assert session._default_driver_memory() == "9216m"
+    ram(4)
+    assert session._default_driver_memory() == "2457m"
+    ram(128)
+    assert session._default_driver_memory() == "24576m"
+
+
 def test_stateful_dual_engages_rocksdb(spark, tmp_path):
     """A keyed stateful dual on the default session reports RocksDB
     custom metrics in its progress — proof the provider engaged, not
