@@ -4123,7 +4123,9 @@ def stream_ivf_index(spark, sf_dir):
         S.as_double_array(F.col("embedding")).alias("c_emb"),
     )
     index_dir = tempfile.mkdtemp(prefix="rars_stream_ivf_")
-    stage = ivf_index_foreach_batch(index_dir, dim=64, n_cells=16)
+    stage = ivf_index_foreach_batch(
+        index_dir, dim=64, n_cells=16, expected_corpus_rows=candidates.count()
+    )
     stage(candidates.filter(F.col("neighbor_id") % 2 == 0), 0)
     stage(candidates.filter(F.col("neighbor_id") % 2 == 1), 1)
     return ivf_query_from_index(spark, index_dir, queries, k=5, nprobe=4)
@@ -4689,7 +4691,9 @@ def stream_semantic_dedup_clustered(spark, sf_dir):
 
     emb = _semdedup_emb(spark, sf_dir)
     index_dir = tempfile.mkdtemp(prefix="rars_stream_semdedup_")
-    stage = semdedup_clustered_foreach_batch(index_dir, dim=64, threshold=0.4)
+    stage = semdedup_clustered_foreach_batch(
+        index_dir, dim=64, threshold=0.4, expected_corpus_rows=emb.count()
+    )
     stage(emb.filter(F.col("vec_id") % 2 == 0), 0)
     stage(emb.filter(F.col("vec_id") % 2 == 1), 1)
     return semdedup_clustered_keep_list(spark, index_dir)
@@ -4723,7 +4727,9 @@ def stream_semdedup_compacted(spark, sf_dir):
     emb = _semdedup_emb(spark, sf_dir)
     index_dir = tempfile.mkdtemp(prefix="rars_stream_semdedup_c_")
     stage = auto_compacting(
-        semdedup_clustered_foreach_batch(index_dir, dim=64, threshold=0.4),
+        semdedup_clustered_foreach_batch(
+            index_dir, dim=64, threshold=0.4, expected_corpus_rows=emb.count()
+        ),
         lambda sp, through: semdedup_clustered_compact_store(
             sp, index_dir, through
         ),
@@ -13101,7 +13107,9 @@ def stream_ivf_compacted(spark, sf_dir):
         S.as_double_array(F.col("embedding")).alias("c_emb"),
     )
     index_dir = tempfile.mkdtemp(prefix="rars_stream_ivf_cp_")
-    stage = ivf_index_foreach_batch(index_dir, dim=64, n_cells=16)
+    stage = ivf_index_foreach_batch(
+        index_dir, dim=64, n_cells=16, expected_corpus_rows=candidates.count()
+    )
     stage(candidates.filter(F.col("neighbor_id") % 3 == 0), 0)
     stage(candidates.filter(F.col("neighbor_id") % 3 == 1), 1)
     # epochs 0-1 are committed; compact them, then keep ingesting

@@ -82,14 +82,20 @@ def _round_half_up(x: float, ndigits: int) -> float:
     )
 
 
-# path -> StructType of an epoch/Hive store, learned on first read.
-# SCHEMA metadata only, never row data: every store here has a fixed
-# column set for its lifetime (epochs append rows, not columns), so the
-# per-call parquet footer-inference job (profiled: ~40 one-task 0.04 s
+# path -> StructType of an epoch/Hive store, learned on first read or
+# write. SCHEMA metadata only, never row data: every store here has a
+# fixed column set for its lifetime (epochs append rows, not columns), so
+# the per-call parquet footer-inference job (profiled: ~40 one-task 0.04 s
 # jobs per compacted-stream query, each with its own plan/launch gap) is
 # pure repeated work. Keys are the per-query tempdir store roots, so
 # entries can never collide across bench runs; rows are always re-read
-# from parquet.
+# from parquet. Every epoch-store read goes through it: ``read_store``
+# (``"epoch"`` priors and their compaction), ``read_epoch_table`` and
+# ``_prior_versions`` (``v{E}`` readers) and ``_compact_version_dirs``.
+# ``EpochStore.write`` records the written frame's schema for the ``v{E}``
+# kinds, whose dirs hold no partition columns; an ``"epoch"`` store keeps
+# its inferred schema, because its partition types come from the
+# directory names.
 _STORE_SCHEMA_CACHE: dict = {}
 
 
@@ -209,9 +215,15 @@ def bucket_prune(df: DataFrame, col: str, values: list) -> DataFrame:
     is small; past ~1024 values the expression tree itself gets heavy,
     so switch to a broadcast semi-join on the partition column (pruned
     at runtime by dynamic partition pruning, and at worst a scan that
-    only happens when the delta genuinely touches most of the store)."""
+    only happens when the delta genuinely touches most of the store).
+    The IN list is sorted: the values come from a ``distinct().collect()``
+    whose order varies from epoch to epoch, and an IN list of up to 10
+    values is generated as code in list order, so each order compiles
+    its own class. Sorted, the lists of later epochs recur: in a
+    continuing ER stream (fresh documents every epoch) a new epoch
+    compiled 6 classes with sorted lists and 12 in most epochs without."""
     if len(values) <= 1024:
-        return df.filter(F.col(col).isin(values))
+        return df.filter(F.col(col).isin(sorted(values)))
     spark = df.sparkSession
     touched = spark.createDataFrame(
         [(int(v),) for v in values], f"{col} bigint"
@@ -1287,7 +1299,7 @@ def semdedup_clustered_foreach_batch(
         prior = vecs.prior(spark, epoch_id)
         if prior is not None:
             both = both.unionByName(
-                prior.filter(F.col("cell").isin(touched)).select(
+                bucket_prune(prior, "cell", touched).select(
                     "id", "c_emb", "cell", F.lit(False).alias("is_new")
                 )
             )
@@ -2257,10 +2269,14 @@ def _prior_versions(spark, root: str, before_epoch: int):
         and int(n[1:]) < int(before_epoch)
         and fsutil.has_parquet_files(os.path.join(root, n))
     ]
-    if not dirs:
-        return None
+    return _read_versions(spark, root, dirs) if dirs else None
+
+
+def _read_versions(spark, root: str, names: list) -> DataFrame:
+    """One multi-path scan of the named ``v{E}`` dirs of a store, with
+    the store's schema from :data:`_STORE_SCHEMA_CACHE`."""
     df = _cached_schema_reader(spark, root).parquet(
-        *(os.path.join(root, n) for n in dirs)
+        *(os.path.join(root, n) for n in names)
     )
     _STORE_SCHEMA_CACHE.setdefault(root, df.schema)
     return df
@@ -3964,7 +3980,7 @@ def assoc_items_foreach_batch(
             # |batch baskets|) distinct bucket ints (the er_index bkt_rows
             # class), fed to a directory-pruned store read
             bkts = [r["bkt"] for r in bi.select("bkt").distinct().collect()]
-            prior = prior.filter(F.col("bkt").isin(bkts)).select("basket", "item")
+            prior = bucket_prune(prior, "bkt", bkts).select("basket", "item")
             new = bi.join(prior, ["basket", "item"], "left_anti").persist()
             # persist-scope: in-function — unpersisted after the epoch's
             # writes below
@@ -4438,6 +4454,8 @@ class EpochStore:
         else:
             path = os.path.join(self.root, f"v{int(epoch_id)}")
             df.write.mode("overwrite").parquet(path)
+            if self.root not in _STORE_SCHEMA_CACHE:
+                _STORE_SCHEMA_CACHE[self.root] = df.schema
         return path
 
     def prior(self, spark, epoch_id: int) -> DataFrame | None:
@@ -4497,7 +4515,9 @@ def _compact_stores(spark, stores: list, through_epoch: int) -> None:
     """Compact every store of a dual. The stores live in disjoint
     directories, so their folds run as overlapped driver jobs
     (:func:`_overlap_jobs`, guide §2.6)."""
-    _overlap_jobs(*(partial(s.compact, spark, through_epoch) for s in stores))
+    _overlap_jobs(
+        spark, *(partial(s.compact, spark, through_epoch) for s in stores)
+    )
 
 
 def _write_stores(stores: list, frames: list, epoch_id: int) -> None:
@@ -4505,7 +4525,8 @@ def _write_stores(stores: list, frames: list, epoch_id: int) -> None:
     epoch's store writes read only pinned frames and earlier epochs, so
     they are independent (guide §2.6)."""
     _overlap_jobs(
-        *(partial(s.write, df, epoch_id) for s, df in zip(stores, frames, strict=True))
+        frames[0].sparkSession,
+        *(partial(s.write, df, epoch_id) for s, df in zip(stores, frames, strict=True)),
     )
 
 
@@ -4552,7 +4573,7 @@ def compact_epoch_store(
     tmp = os.path.join(root, f"_compact_tmp_e{int(through_epoch)}")
     if not fsutil.exists(os.path.join(tmp, "_SUCCESS")):
         df = (
-            spark.read.parquet(root)
+            read_store(spark, root)
             .filter(F.col("epoch") <= int(through_epoch))
             .drop("epoch")
         )
@@ -4626,8 +4647,9 @@ def _compact_version_dirs(spark, root, through_epoch, rebuild) -> None:
         # one multi-path scan relation instead of an N-deep union tree:
         # same rows (each version dir was written by the same stage with
         # the same schema), flat plan, single file-listing pass
-        df = spark.read.parquet(*(os.path.join(root, n) for n in versions))
-        rebuild(df).write.mode("overwrite").parquet(tmp)
+        rebuild(_read_versions(spark, root, versions)).write.mode(
+            "overwrite"
+        ).parquet(tmp)
     for n in versions:
         fsutil.delete(os.path.join(root, n))
     fsutil.rename(tmp, os.path.join(root, f"v{int(through_epoch)}"))
@@ -4635,7 +4657,7 @@ def _compact_version_dirs(spark, root, through_epoch, rebuild) -> None:
     spark.catalog.refreshByPath(root)
 
 
-def _overlap_jobs(*thunks) -> None:
+def _overlap_jobs(spark, *thunks) -> None:
     """Run independent store-maintenance thunks as CONCURRENT driver
     jobs (guide §2.6): Spark's scheduler happily runs several jobs at
     once inside one application — multi-store compactions were only
@@ -4649,7 +4671,9 @@ def _overlap_jobs(*thunks) -> None:
     crash mid-pool leaves a subset compacted, exactly like a crash
     mid-sequence, and the re-run completes the rest. Every thunk runs
     and every error is observed: once the pool drains, the first error
-    re-raises with the others appended to its ``__notes__``."""
+    re-raises with the others appended to its ``__notes__``. The pool
+    threads inherit the calling thread's local properties (job group,
+    description) and ``spark``'s job tags."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -4661,11 +4685,21 @@ def _overlap_jobs(*thunks) -> None:
     # group, active session) into the pool threads — the documented way
     # to run driver threads (guide §2.6); without it fsutil's
     # getActiveSession-based scheme resolution would silently fall back
-    # to stdlib paths on fresh py4j threads.
+    # to stdlib paths on fresh py4j threads. Given the session, it also
+    # copies the session's job tags (and does not warn that it cannot).
+    # Each thunk is wrapped on its own: one wrapper clones the caller's
+    # local properties once and installs that same object in every
+    # thread it runs in, where Spark's SQL execution and job-tag code
+    # edit it in place (execution ids, tags) under the other threads.
+    def inherit(thunk):
+        wrap = inheritable_thread_target(spark)
+        # pinned-thread mode off: it hands back spark, not a wrapper
+        return wrap(thunk) if callable(wrap) else thunk
+
     # 3 in flight is plenty (guide §2.6): enough to fill job-launch
     # gaps and task tails, not so many they fight for cores
     with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
     errors = [e for e in (f.exception() for f in futures) if e is not None]
     if errors:
         first, *rest = errors

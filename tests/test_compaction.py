@@ -13,6 +13,7 @@ derived result stays exactly equal to batch.
 import os
 import shutil
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,6 +99,152 @@ def test_er_compaction_contract_invisible(spark):
     assert again == want
     shutil.rmtree(out_a, ignore_errors=True)
     shutil.rmtree(out_b, ignore_errors=True)
+
+
+# --------------------------------------------------------------------------
+# ER sequences reuse the JVM's generated classes and the stores' schemas
+# --------------------------------------------------------------------------
+
+
+def _er_docs(spark):
+    """60 documents, an ER sequence the size of the benchmark's warm-up:
+    the first 54 of the sf0.001 corpus and near-duplicates of six of
+    them (the text plus a marker word, as the benchmark's generator
+    makes them), so there are entities to resolve."""
+    from conftest import sf_dir
+
+    from rapids_and_rivers_spark.sources import load_table
+
+    docs = load_table(spark, sf_dir(), "documents").select("doc_id", "text")
+    dups = docs.filter(F.col("doc_id") < 6).select(
+        (F.col("doc_id") + 1000).alias("doc_id"),
+        F.concat("text", F.lit(" dup")).alias("text"),
+    )
+    return docs.filter(F.col("doc_id") < 54).unionByName(dups)
+
+
+def _er_ingest(spark, docs, index_dir, epochs):
+    stage = D.er_index_foreach_batch(index_dir, expected_records=60)
+    for e in epochs:
+        stage(docs.filter(F.col("doc_id") % 3 == e), e)
+
+
+class _JobGroup:
+    """Run a block under a Spark job group and count its jobs."""
+
+    def __init__(self, spark, name):
+        self.sc, self.name = spark.sparkContext, name
+
+    def __enter__(self):
+        self.sc.setJobGroup(self.name, self.name)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+        self.sc.setLocalProperty("spark.job.description", None)
+
+    @property
+    def jobs(self):
+        return len(self.sc.statusTracker().getJobIdsForGroup(self.name))
+
+
+def _schema_fields(df):
+    return [(f.name, f.dataType, f.nullable) for f in df.schema.fields]
+
+
+def test_second_er_sequence_compiles_no_generated_class(spark, tmp_path):
+    """A warm ER sequence (3 epochs, compaction, entity read) finds every
+    generated class it needs in the JVM's cache: the session's
+    ``spark.sql.codegen.cache.maxEntries`` default holds the sequence's
+    ~200 classes, where Spark's default of 100 recompiled ~325 per
+    sequence."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    docs = _er_docs(spark)
+
+    def sequence(index_dir):
+        spark.catalog.clearCache()
+        _er_ingest(spark, docs, index_dir, [0, 1])
+        D.er_compact_store(spark, index_dir, through_epoch=1)
+        _er_ingest(spark, docs, index_dir, [2])
+        return sorted(tuple(r) for r in D.er_current_entities(spark, index_dir).collect())
+
+    first = sequence(str(tmp_path / "first"))
+    before = compiles.getCount()
+    second = sequence(str(tmp_path / "second"))
+    assert compiles.getCount() - before == 0
+    assert second == first and any(n > 1 for (_c, n, _m) in first)
+
+
+def test_continuing_er_stream_recompiles_only_epoch_literal_classes(spark, tmp_path):
+    """A long-running ER stream gets new documents and a new epoch id
+    every epoch, so it never repeats a sequence. A new epoch still finds
+    most classes it needs in the cache. It compiles only those whose
+    code holds a value of this epoch as a literal: the epoch id (the
+    ``epoch`` column ER adds to its ``snm_*`` writes), its batch filter,
+    and a touched-bucket IN list of up to 10 buckets it has not seen in
+    that order. Here that is 14-16 classes per epoch, and a later
+    compaction compiles none. With Spark's 100-entry cache the same
+    epochs recompiled 86-99 classes and each compaction 19."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    docs = _er_docs(spark)
+    index_dir = str(tmp_path)
+    stage = D.er_index_foreach_batch(index_dir, expected_records=60)
+    new_epoch, compaction = [], []
+    for e in range(6):
+        if e in (2, 4):
+            before = compiles.getCount()
+            D.er_compact_store(spark, index_dir, through_epoch=e - 1)
+            compaction.append(compiles.getCount() - before)
+        before = compiles.getCount()
+        stage(docs.filter(F.col("doc_id") % 6 == e), e)
+        new_epoch.append(compiles.getCount() - before)
+    assert compaction[1] == 0
+    assert max(new_epoch[3:]) <= 20, new_epoch
+
+
+def test_store_schema_cache_serves_compaction_and_reads_like_a_cold_read(
+    spark, tmp_path
+):
+    """Two identical ER indexes: one compacted and read with the schemas
+    its writes and prior reads recorded (warm), one with
+    ``_STORE_SCHEMA_CACHE`` cleared before its compaction and before each
+    read (cold). The Hive ``records`` store, a ``v{E}`` union store and
+    ``er_current_entities`` return the same rows and the same schema
+    (columns, order, types, nullability) either way, and the warm
+    compaction runs fewer jobs than the cold one."""
+    docs = _er_docs(spark)
+    warm, cold = str(tmp_path / "warm"), str(tmp_path / "cold")
+    for index_dir in (warm, cold):
+        _er_ingest(spark, docs, index_dir, [0, 1])
+
+    def reads(index_dir, cold_read):
+        out = {}
+        for name, read in (
+            ("records", lambda: D.read_store(spark, os.path.join(index_dir, "records"))),
+            ("ssj_prefix", lambda: D.read_epoch_table(spark, os.path.join(index_dir, "ssj_prefix"))),
+            ("entities", lambda: D.er_current_entities(spark, index_dir)),
+        ):
+            if cold_read:
+                D._STORE_SCHEMA_CACHE.clear()
+            df = read()
+            out[name] = (_schema_fields(df), sorted(tuple(r) for r in df.collect()))
+        return out
+
+    assert os.path.join(warm, "ssj_prefix") in D._STORE_SCHEMA_CACHE
+    assert os.path.join(warm, "records") in D._STORE_SCHEMA_CACHE
+    with _JobGroup(spark, "schema-cache-warm-compaction") as warm_jobs:
+        D.er_compact_store(spark, warm, through_epoch=1)
+    want = reads(warm, cold_read=False)
+    D._STORE_SCHEMA_CACHE.clear()
+    with _JobGroup(spark, "schema-cache-cold-compaction") as cold_jobs:
+        D.er_compact_store(spark, cold, through_epoch=1)
+    got = reads(cold, cold_read=True)
+    assert warm_jobs.jobs < cold_jobs.jobs
+    for name in want:
+        assert got[name][0] == want[name][0], name
+        assert got[name][1] == want[name][1] and got[name][1], name
 
 
 # --------------------------------------------------------------------------
@@ -640,10 +787,89 @@ def test_overlap_jobs_runs_every_thunk_and_reports_every_error(spark):
         return thunk
 
     with pytest.raises(ValueError) as info:
-        _overlap_jobs(fail("first store"), lambda: ran.append("ok"), fail("third store"))
+        _overlap_jobs(
+            spark, fail("first store"), lambda: ran.append("ok"), fail("third store")
+        )
     assert sorted(ran) == ["first store", "ok", "third store"]
     assert str(info.value) == "first store"
     assert any("third store" in note for note in info.value.__notes__)
+
+
+def test_overlap_jobs_inherit_session_tags_without_warning(spark):
+    """The pool threads see a job tag the caller added before the call,
+    and wrapping the thunks warns nothing (pyspark warns "Spark session
+    is not provided. Tags will not be inherited." when it gets none)."""
+    import warnings
+
+    from rapids_and_rivers_spark.streaming.duals import _overlap_jobs
+
+    seen = []
+    spark.addTag("overlap-step")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            _overlap_jobs(
+                spark,
+                lambda: seen.append(spark.getTags()),
+                lambda: seen.append(spark.getTags()),
+            )
+    finally:
+        spark.removeTag("overlap-step")
+    assert len(seen) == 2
+    assert all("overlap-step" in tags for tags in seen)
+
+
+def test_overlap_jobs_threads_keep_their_own_local_properties(spark):
+    """Each pool thread starts from its own copy of the caller's local
+    properties: a property one overlapped thunk sets is not seen by
+    another thunk running at the same time, nor by the caller, and a
+    SQL action in one thunk does not leave its execution id in another
+    (Spark sets ``spark.sql.execution.id`` in the thread's properties
+    while the action runs)."""
+    import threading
+
+    from rapids_and_rivers_spark.streaming.duals import _overlap_jobs
+
+    sc = spark.sparkContext
+    both_set = threading.Barrier(2, timeout=60)
+    seen = {}
+
+    def sets(value):
+        def thunk():
+            sc.setLocalProperty("rars.test.owner", value)
+            both_set.wait()
+            seen[value] = sc.getLocalProperty("rars.test.owner")
+            seen[value + ":caller"] = sc.getLocalProperty("rars.test.caller")
+
+        return thunk
+
+    sc.setLocalProperty("rars.test.caller", "caller")
+    try:
+        _overlap_jobs(spark, sets("a"), sets("b"))
+        assert seen == {"a": "a", "b": "b", "a:caller": "caller", "b:caller": "caller"}
+        assert sc.getLocalProperty("rars.test.owner") is None
+
+        done = threading.Event()
+        execution_ids = []
+
+        def action():
+            # a SQL action: its task sleeps, so its execution id stays
+            # set in this thread's properties for half a second
+            slow = F.udf(lambda i: time.sleep(0.5) or i, "long")
+            try:
+                spark.range(1).select(slow("id")).collect()
+            finally:
+                done.set()
+
+        def reader():
+            while not done.is_set():
+                execution_ids.append(sc.getLocalProperty("spark.sql.execution.id"))
+                done.wait(0.02)
+
+        _overlap_jobs(spark, action, reader)
+        assert execution_ids and set(execution_ids) == {None}
+    finally:
+        sc.setLocalProperty("rars.test.caller", None)
 
 
 def _crashed_epoch0_store(root):

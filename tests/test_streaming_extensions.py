@@ -3572,3 +3572,30 @@ def test_codebook_recluster_respects_expected_corpus_and_replay(
     )
     assert manifest["train_rows"] == n
     assert sum(manifest["epoch_rows"].values()) == n
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "stream_ivf_index",
+        "stream_ivf_compacted",
+        "stream_semantic_dedup_clustered",
+        "stream_semdedup_compacted",
+    ],
+)
+def test_catalog_codebook_duals_raise_no_false_recluster_event(spark, query):
+    """The catalog's frozen-codebook duals pass their corpus size as the
+    stream-start estimate, so ingesting exactly that corpus raises no
+    re-cluster event (without it the training corpus is epoch 0's rows
+    and two or three equal epochs pass 2x on every run)."""
+    import warnings
+
+    from conftest import sf_dir
+
+    from rapids_and_rivers_spark import catalog
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        rows = catalog.queries()[query](spark, sf_dir()).collect()
+    assert rows
+    assert not [w for w in caught if "re-cluster event" in str(w.message)]

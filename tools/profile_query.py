@@ -6,6 +6,11 @@ the UI enabled, then pulls the executed jobs from the local REST API
 (http://localhost:<port>/api/v1) and prints, per job: duration, stage
 shuffle read/write bytes, input bytes and task count. This is the
 guide-§1 "where is the time actually going" loop without a browser.
+Next to each query's job list it prints how many classes Spark's code
+generator compiled for it and the time that took (Spark's
+``CodegenMetrics`` compile count and ``CodeGenerator.compileTime``), so
+a generated-class cache too small for the working set shows up as
+recompiles of a query that already ran.
 
 Usage: python tools/profile_query.py [sf_dir] query [query ...]
 """
@@ -27,6 +32,14 @@ from rapids_and_rivers_spark import catalog
 def _api(base: str, path: str):
     with urllib.request.urlopen(base + path) as r:
         return json.load(r)
+
+
+def _codegen(spark) -> tuple[int, float]:
+    """(classes compiled, seconds spent compiling) since the JVM started."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return count.getCount(), ns / 1e9
 
 
 def main() -> None:
@@ -54,10 +67,12 @@ def main() -> None:
 
     for name in names:
         jobs_before = {j["jobId"] for j in _api(base, "/jobs")}
+        compiled0, compile_s0 = _codegen(spark)
         t0 = time.perf_counter()
         df = qs[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
+        compiled1, compile_s1 = _codegen(spark)
         time.sleep(0.5)
         jobs = [j for j in _api(base, "/jobs") if j["jobId"] not in jobs_before]
         jobs.sort(key=lambda j: j["jobId"])
@@ -84,6 +99,10 @@ def main() -> None:
                 f"stages={len(j['stageIds'])} {desc}"
             )
         print(f"  sum(job durations) = {total_job:.2f}s (gaps = driver/python time)")
+        print(
+            f"  generated classes compiled: {compiled1 - compiled0} "
+            f"in {compile_s1 - compile_s0:.2f}s"
+        )
         # top stages by executorRunTime for the biggest jobs
         stages = _api(base, "/stages?status=complete")
         new_stage_ids = {s for j in jobs for s in j["stageIds"]}
