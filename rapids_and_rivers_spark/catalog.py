@@ -4719,7 +4719,6 @@ def stream_semdedup_compacted(spark, sf_dir):
 
     from rapids_and_rivers_spark.streaming.duals import (
         auto_compacting,
-        semdedup_clustered_compact_store,
         semdedup_clustered_foreach_batch,
         semdedup_clustered_keep_list,
     )
@@ -4730,10 +4729,6 @@ def stream_semdedup_compacted(spark, sf_dir):
         semdedup_clustered_foreach_batch(
             index_dir, dim=64, threshold=0.4, expected_corpus_rows=emb.count()
         ),
-        lambda sp, through: semdedup_clustered_compact_store(
-            sp, index_dir, through
-        ),
-        watch_roots=[index_dir + "/pairs"],
         max_version_dirs=1,
     )
     stage(emb.filter(F.col("vec_id") % 3 == 0), 0)

@@ -46,6 +46,13 @@ def build_session(
       AQE coalescing);
     - Arrow enabled so any Pandas-UDF slow path is batch-vectorized;
     - UTC session timezone for deterministic temporal semantics;
+    - the driver heap (``spark.driver.memory``) is 60% of physical RAM,
+      capped at 24g (:func:`_default_driver_memory`): sized for ONE
+      session per machine. Two sessions side by side can ask for more
+      memory than the machine has — on a 15 GB machine two concurrent
+      sessions (9216m each) ran it out of memory and the kernel's OOM
+      killer ended one driver JVM — so give each concurrent session a
+      smaller ``SPARK_DRIVER_MEMORY`` (e.g. ``4g``);
     - generated classes stay compiled for the JVM's life: the codegen
       cache (``spark.sql.codegen.cache.maxEntries``, a static conf) holds
       4096 classes instead of Spark's 100, and class names carry no

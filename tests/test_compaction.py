@@ -247,6 +247,28 @@ def test_store_schema_cache_serves_compaction_and_reads_like_a_cold_read(
         assert got[name][1] == want[name][1] and got[name][1], name
 
 
+def test_epoch_store_write_records_the_cold_read_schema(spark, tmp_path):
+    """The first ``records`` write of an ER index records the schema a
+    cold read infers (data columns, then ``epoch`` and ``blk_bucket`` as
+    int although the bucket is written as bigint), so epoch 1's prior
+    read of the store runs no footer-inference job."""
+    docs = _er_docs(spark)
+    index_dir = str(tmp_path)
+    D._STORE_SCHEMA_CACHE.clear()
+    _er_ingest(spark, docs, index_dir, [0])
+    records = D._er_stores(index_dir)[0]
+    with _JobGroup(spark, "records-prior-epoch-1") as jobs:
+        prior = records.prior(spark, 1)
+    assert jobs.jobs == 0
+    D._STORE_SCHEMA_CACHE.clear()
+    cold = D.read_store(spark, records.root)
+    assert _schema_fields(prior) == _schema_fields(cold)
+    assert [f.name for f in cold.schema.fields][-2:] == ["epoch", "blk_bucket"]
+    assert sorted(tuple(r) for r in prior.collect()) == sorted(
+        tuple(r) for r in cold.collect()
+    )
+
+
 # --------------------------------------------------------------------------
 # triangles: the 50+ epoch lifecycle run (VERDICT r9 #3 "done" bar)
 # --------------------------------------------------------------------------
@@ -680,7 +702,6 @@ def test_compaction_watermark_refuses_folded_epoch_replay(spark, dual):
 def test_auto_compaction_bounds_dirs_over_long_run(spark):
     from rapids_and_rivers_spark.streaming.duals import (
         auto_compacting,
-        kcore_compact_store,
         kcore_foreach_batch,
         read_latest_core,
         store_version_dirs,
@@ -695,12 +716,7 @@ def test_auto_compaction_bounds_dirs_over_long_run(spark):
     for out in (out_a, out_b):
         stage = kcore_foreach_batch(out, k=2, rounds=2)
         if out == out_b:
-            stage = auto_compacting(
-                stage,
-                lambda sp, through: kcore_compact_store(sp, out_b, through),
-                watch_roots=[os.path.join(out_b, "edges")],
-                max_version_dirs=max_dirs,
-            )
+            stage = auto_compacting(stage, max_version_dirs=max_dirs)
         for e in range(n):
             stage(spark.createDataFrame(ring[e : e + 1], "src long, dst long"), e)
             if out == out_b:
@@ -729,7 +745,6 @@ def test_semdedup_clustered_compaction_invisible(spark):
     from rapids_and_rivers_spark.sources import load_table
     from rapids_and_rivers_spark.streaming.duals import (
         auto_compacting,
-        semdedup_clustered_compact_store,
         semdedup_clustered_foreach_batch,
         semdedup_clustered_keep_list,
         store_version_dirs,
@@ -743,14 +758,7 @@ def test_semdedup_clustered_compaction_invisible(spark):
         idx = tempfile.mkdtemp(prefix=f"rars_t_sdc_{mode}_")
         stage = semdedup_clustered_foreach_batch(idx, dim=64, threshold=0.4)
         if mode == "compacted":
-            stage = auto_compacting(
-                stage,
-                lambda sp, through, idx=idx: semdedup_clustered_compact_store(
-                    sp, idx, through
-                ),
-                watch_roots=[os.path.join(idx, "pairs")],
-                max_version_dirs=1,
-            )
+            stage = auto_compacting(stage, max_version_dirs=1)
         for e in range(3):
             stage(emb.filter(F.col("vec_id") % 3 == e), e)
         outs[mode] = (
@@ -976,3 +984,36 @@ def test_manifest_write_failing_midway_keeps_previous_manifest(
             '{"compacted_through": 2, "note": "\ud800"}',
         )
     assert D.compaction_watermark(root) == 1
+
+
+# --------------------------------------------------------------------------
+# store readers: crash-left snapshots and empty stores
+# --------------------------------------------------------------------------
+
+
+def test_latest_read_skips_a_snapshot_left_by_a_crashed_write(spark, tmp_path):
+    """A crash in epoch 1's rank write leaves ``ranks/v1`` with its parts
+    under ``_temporary/`` only: the newest committed snapshot is still
+    ``v0``, for the public reader and for epoch 2's prior read."""
+    state_dir = str(tmp_path)
+    stage = D.pagerank_foreach_batch(state_dir)
+    stage(spark.createDataFrame([(1, 2, 1.0), (2, 3, 1.0)], "src long, dst long, weight double"), 0)
+    want = sorted(tuple(r) for r in D.read_latest_ranks(spark, state_dir).collect())
+    _crashed_epoch0_store(os.path.join(state_dir, "ranks", "v1"))
+    assert sorted(tuple(r) for r in D.read_latest_ranks(spark, state_dir).collect()) == want
+    prior = D._pagerank_stores(state_dir)[-1].prior(spark, 2)
+    assert sorted(tuple(r) for r in prior.collect()) == want
+
+
+def test_readers_without_a_snapshot_raise_file_not_found(spark, tmp_path):
+    """A packing index holding only a crash-left staging dir, and a CDC
+    base dir without any ``snap_v*``, have nothing to read."""
+    packing = tmp_path / "packing_state" / "packing" / "_staged_v0" / "skey=ab"
+    packing.mkdir(parents=True)
+    (packing / "part-0.parquet").touch()
+    with pytest.raises(FileNotFoundError):
+        D.packing_from_index(spark, str(tmp_path / "packing_state"))
+    cdc = tmp_path / "cdc"
+    cdc.mkdir()
+    with pytest.raises(FileNotFoundError):
+        D.read_latest_snapshot(spark, str(cdc))

@@ -3,10 +3,11 @@
 
 The round-10 compactors made epoch stores foldable; round 11's
 ``duals.auto_compacting`` decides WHEN (size-pressure trigger: more
-than ``max_version_dirs`` epoch/version dirs at a watched root ->
-compact through ``epoch_id - 1``, the watermark the foreachBatch commit
-contract guarantees safe). This soak proves the lifecycle claim over a
-run long enough for the difference to matter:
+than ``max_version_dirs`` epoch/version dirs at any root of the stage's
+``stage.stores`` -> compact every store through ``epoch_id - 1``, the
+watermark the foreachBatch commit contract guarantees safe). This soak
+proves the lifecycle claim over a run long enough for the difference to
+matter:
 
 - two store shapes: the k-core union edge log + latest-only snapshots,
   and the association-rule store (Hive epoch dirs + mergeable deltas);
@@ -66,7 +67,6 @@ def _summ(times):
 def soak_kcore(spark, epochs, compact):
     from rapids_and_rivers_spark.streaming.duals import (
         auto_compacting,
-        kcore_compact_store,
         kcore_foreach_batch,
         read_latest_core,
         store_version_dirs,
@@ -77,12 +77,7 @@ def soak_kcore(spark, epochs, compact):
     n_nodes = 2 * epochs
     stage = kcore_foreach_batch(out, k=2, rounds=2)
     if compact:
-        stage = auto_compacting(
-            stage,
-            lambda sp, through: kcore_compact_store(sp, out, through),
-            watch_roots=[edges_root],
-            max_version_dirs=MAX_DIRS,
-        )
+        stage = auto_compacting(stage, max_version_dirs=MAX_DIRS)
     times, peak = [], 0
     for e in range(epochs):
         # a growing ring: each epoch adds two edges, closing a cycle at
@@ -106,7 +101,6 @@ def soak_kcore(spark, epochs, compact):
 
 def soak_assoc(spark, epochs, compact):
     from rapids_and_rivers_spark.streaming.duals import (
-        assoc_compact_store,
         assoc_items_foreach_batch,
         assoc_rules_from_store,
         auto_compacting,
@@ -117,12 +111,7 @@ def soak_assoc(spark, epochs, compact):
     delta_root = os.path.join(out, "pair_delta")
     stage = assoc_items_foreach_batch(out, expected_items=6 * epochs)
     if compact:
-        stage = auto_compacting(
-            stage,
-            lambda sp, through: assoc_compact_store(sp, out, through),
-            watch_roots=[delta_root],
-            max_version_dirs=MAX_DIRS,
-        )
+        stage = auto_compacting(stage, max_version_dirs=MAX_DIRS)
     items = ["ale", "brie", "cod", "date", "egg"]
     times, peak = [], 0
     for e in range(epochs):
