@@ -619,11 +619,13 @@ def contamination_from_parts(
     ndigits: int = 4,
 ) -> DataFrame:
     """The decontamination screen's scoring tail, shared by the batch
-    query (:func:`contamination_check`) and the streaming dual
-    (streaming/duals.py contamination_from_index) — one formula, no
-    drift: ``postings`` is (id, n_shingles, sh nullable), ``bench_shingles``
-    the distinct benchmark shingle set (sh); output is the per-doc hit
-    count, overlap fraction, and contaminated flag."""
+    query (:func:`contamination_check`) and the streaming duals
+    (streaming/duals.py contamination_from_index and
+    decontaminate_foreach_batch) — one formula, no drift: ``postings``
+    is (id, n_shingles, sh nullable), ``bench_shingles`` the distinct
+    benchmark shingle set (sh; a broadcast hint on it carries through to
+    the join); output is the per-doc hit count, overlap fraction, and
+    contaminated flag."""
     hits = (
         postings.join(
             bench_shingles.withColumn("__hit", F.lit(1)), "sh", "left"
@@ -955,6 +957,23 @@ def duplicate_clusters_star(
     ).select("node", F.coalesce("cluster", "node").alias("cluster"))
 
 
+def keep_list_from_pairs(pairs: DataFrame, ids: DataFrame, id_col: str) -> DataFrame:
+    """The SemDeDup keep-list tail shared by the batch operators and the
+    streaming keep-lists (streaming/duals.py): components of the
+    near-dup ``pairs`` (id_a, id_b) by :func:`duplicate_clusters_star`,
+    left-joined onto every document of ``ids`` (id). Output:
+    ``(id_col, rep_id, is_kept)``, rep_id = component minimum, a
+    document with no duplicate keeps itself."""
+    clusters = duplicate_clusters_star(pairs)
+    return ids.join(
+        clusters.select(F.col("node").alias("id"), "cluster"), "id", "left"
+    ).select(
+        F.col("id").alias(id_col),
+        F.coalesce("cluster", "id").alias("rep_id"),
+        (F.coalesce("cluster", F.col("id")) == F.col("id")).alias("is_kept"),
+    )
+
+
 # --- embedding near-dup -------------------------------------------------------
 
 
@@ -984,15 +1003,7 @@ def semantic_dedup(
         df, emb_col=emb_col, id_col=id_col, block_col=block_col,
         threshold=threshold,
     )
-    clusters = duplicate_clusters_star(pairs)
-    all_ids = df.select(F.col(id_col).alias("id"))
-    return all_ids.join(
-        clusters.select(F.col("node").alias("id"), "cluster"), "id", "left"
-    ).select(
-        F.col("id").alias(id_col),
-        F.coalesce("cluster", "id").alias("rep_id"),
-        (F.coalesce("cluster", F.col("id")) == F.col("id")).alias("is_kept"),
-    )
+    return keep_list_from_pairs(pairs, df.select(F.col(id_col).alias("id")), id_col)
 
 
 def adaptive_band_params(
@@ -1644,12 +1655,4 @@ def semantic_dedup_clustered(
         threshold=threshold,
         scale=scale,
     )
-    clusters = duplicate_clusters_star(pairs)
-    all_ids = df.select(F.col(id_col).alias("id"))
-    return all_ids.join(
-        clusters.select(F.col("node").alias("id"), "cluster"), "id", "left"
-    ).select(
-        F.col("id").alias(id_col),
-        F.coalesce("cluster", "id").alias("rep_id"),
-        (F.coalesce("cluster", F.col("id")) == F.col("id")).alias("is_kept"),
-    )
+    return keep_list_from_pairs(pairs, df.select(F.col(id_col).alias("id")), id_col)

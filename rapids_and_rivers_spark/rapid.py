@@ -132,10 +132,20 @@ class TestRapid(AbstractRapid):
             )
         except MessageProblemsException:
             return
+        # the streaming runtime's listener contract: a listener that takes
+        # a third parameter also gets the record's MessageMetadata
+        from rapids_and_rivers_spark.streaming.runtime import (
+            MessageMetadata,
+            _wants_metadata,
+        )
+
         packet.declare(*river.declared_keys)
         context = _ReplyContext(self, packet, default_key=key)
         for listener in river.listeners:
-            listener(packet, context)
+            if _wants_metadata(listener):
+                listener(packet, context, MessageMetadata(key=key))
+            else:
+                listener(packet, context)
 
     # -- publish + inspection (RapidInspector, TestRapid.kt:65-75) -------------
 

@@ -105,11 +105,8 @@ def build_session(
         # the stage to 1-2 tasks regardless of core count — measured
         # 6.3 s -> 1.25 s on the streaming-ER verify at sf0.1 with 32
         # cores. 64k keeps exactly those stages parallel at ANY scale;
-        # env-overridable for cluster profiles that want the default.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # a cluster profile that wants Spark's 1m passes it in extra_conf.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # open-schema JSON merge (envelope ⊕ payload) relies on map_concat

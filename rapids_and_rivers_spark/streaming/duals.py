@@ -1118,20 +1118,14 @@ def semdedup_keep_list(spark, index_dir: str, id_col: str = "vec_id") -> DataFra
 
     Output: ``(id_col, rep_id, is_kept)`` for every ingested document.
     """
-    from rapids_and_rivers_spark.operators.dedup import duplicate_clusters_star
+    from rapids_and_rivers_spark.operators.dedup import keep_list_from_pairs
 
     docs, pair_store = _semdedup_stores(index_dir)
     pairs = (
         pair_store.read(spark).select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
     )
-    clusters = duplicate_clusters_star(pairs)
-    all_ids = docs.read(spark).select("id").distinct()
-    return all_ids.join(
-        clusters.select(F.col("node").alias("id"), "cluster"), "id", "left"
-    ).select(
-        F.col("id").alias(id_col),
-        F.coalesce("cluster", "id").alias("rep_id"),
-        (F.coalesce("cluster", F.col("id")) == F.col("id")).alias("is_kept"),
+    return keep_list_from_pairs(
+        pairs, docs.read(spark).select("id").distinct(), id_col
     )
 
 
@@ -1300,22 +1294,14 @@ def semdedup_clustered_keep_list(
     ``semantic_dedup_clustered``, so the drained result equals the
     batch operator on the union corpus under the same frozen codebook.
     Output: ``(id_col, rep_id, is_kept)`` for every ingested vector."""
-    from rapids_and_rivers_spark.operators.dedup import (
-        duplicate_clusters_star,
-    )
+    from rapids_and_rivers_spark.operators.dedup import keep_list_from_pairs
 
     vecs, pair_store = _semdedup_clustered_stores(index_dir)
     pairs = (
         pair_store.read(spark).select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
     )
-    clusters = duplicate_clusters_star(pairs)
-    all_ids = vecs.read(spark).select("id").distinct()
-    return all_ids.join(
-        clusters.select(F.col("node").alias("id"), "cluster"), "id", "left"
-    ).select(
-        F.col("id").alias(id_col),
-        F.coalesce("cluster", "id").alias("rep_id"),
-        (F.coalesce("cluster", F.col("id")) == F.col("id")).alias("is_kept"),
+    return keep_list_from_pairs(
+        pairs, vecs.read(spark).select("id").distinct(), id_col
     )
 
 
@@ -1360,14 +1346,16 @@ def decontaminate_foreach_batch(
     per epoch, so replay is idempotent); read results back with
     :func:`read_epoch_table`.
     """
-    from rapids_and_rivers_spark.operators.dedup import shingled
+    from rapids_and_rivers_spark.operators.dedup import (
+        contamination_from_parts,
+        shingled,
+    )
     from rapids_and_rivers_spark.sources.tables import spread
 
     bench_sh = (
         shingled(spread(benchmark, id_col), col, id_col, n=shingle_n)
         .select(F.explode("shingles").alias("sh"))
         .distinct()
-        .withColumn("__hit", F.lit(1))
         # persist-scope: stream lifetime — probed by EVERY micro-batch this
         # factory's stage runs; foreachBatch factories have no stop hook to
         # unpersist from (see note below)
@@ -1385,21 +1373,8 @@ def decontaminate_foreach_batch(
             F.size("shingles").alias("n_shingles"),
             F.explode_outer("shingles").alias("sh"),
         )
-        hits = (
-            postings.join(F.broadcast(bench_sh), "sh", "left")
-            .groupBy("id", "n_shingles")
-            .agg(F.count("__hit").alias("n_hit"))
-        )
-        frac = F.round(
-            F.col("n_hit") / F.nullif(F.col("n_shingles"), F.lit(0)).cast("double"),
-            ndigits,
-        )
-        out = hits.select(
-            "id",
-            F.col("n_shingles").cast("long").alias("n_shingles"),
-            F.col("n_hit").cast("long").alias("n_hit"),
-            frac.alias("overlap_frac"),
-            F.coalesce(frac >= threshold, F.lit(False)).alias("contaminated"),
+        out = contamination_from_parts(
+            postings, F.broadcast(bench_sh), threshold, ndigits
         )
         out_store.write(out, epoch_id)
 

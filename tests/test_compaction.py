@@ -12,7 +12,6 @@ derived result stays exactly equal to batch.
 
 import os
 import shutil
-import tempfile
 import time
 
 import pytest
@@ -54,7 +53,7 @@ def _er_batch(spark, ids):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_er_compaction_contract_invisible(spark):
+def test_er_compaction_contract_invisible(spark, tmp_path):
     """er_compact_store folds every channel (records epoch dirs,
     ssj_* and snm_* v-dirs); er_current_entities is identical before
     and after, post-compaction ingest still resolves cross-epoch
@@ -65,8 +64,8 @@ def test_er_compaction_contract_invisible(spark):
         er_index_foreach_batch,
     )
 
-    out_a = tempfile.mkdtemp(prefix="rars_t_erc_a_")
-    out_b = tempfile.mkdtemp(prefix="rars_t_erc_b_")
+    out_a = str(tmp_path / "erc_a")
+    out_b = str(tmp_path / "erc_b")
     for out in (out_a, out_b):
         stage = er_index_foreach_batch(out)
         stage(_er_batch(spark, {1, 3}), 0)
@@ -274,7 +273,7 @@ def test_epoch_store_write_records_the_cold_read_schema(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 
-def test_triangles_longrun_50_epochs_bounded_files(spark):
+def test_triangles_longrun_50_epochs_bounded_files(spark, tmp_path):
     """52 epochs of delta edges with triangles_compact_store every 10
     epochs (watermark = last committed epoch - 1, honoring the
     at-least-once safety contract): epoch-directory counts stay
@@ -290,7 +289,7 @@ def test_triangles_longrun_50_epochs_bounded_files(spark):
         triangles_compact_store,
     )
 
-    state_dir = tempfile.mkdtemp(prefix="rars_t_tric_")
+    state_dir = str(tmp_path / "tric")
     stage = triangles_foreach_batch(state_dir, expected_adj_rows=1000)
     all_edges = []
     max_epoch_dirs = 0
@@ -332,7 +331,7 @@ def test_triangles_longrun_50_epochs_bounded_files(spark):
     shutil.rmtree(state_dir, ignore_errors=True)
 
 
-def test_triangles_post_compaction_ingest_and_replay(spark):
+def test_triangles_post_compaction_ingest_and_replay(spark, tmp_path):
     """After compaction, the NEXT epoch's delta anti-join (epoch <
     current over compacted rows) and adjacency probes still see the
     full prior graph; replaying that epoch changes nothing."""
@@ -343,7 +342,7 @@ def test_triangles_post_compaction_ingest_and_replay(spark):
         triangles_foreach_batch,
     )
 
-    state_dir = tempfile.mkdtemp(prefix="rars_t_trip_")
+    state_dir = str(tmp_path / "trip")
     stage = triangles_foreach_batch(state_dir, expected_adj_rows=1000)
     stage(spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long"), 0)
     stage(spark.createDataFrame([(3, 4)], "src long, dst long"), 1)
@@ -376,7 +375,7 @@ def test_triangles_post_compaction_ingest_and_replay(spark):
 # --------------------------------------------------------------------------
 
 
-def test_kcore_compaction_invisible(spark):
+def test_kcore_compaction_invisible(spark, tmp_path):
     from rapids_and_rivers_spark.streaming.duals import (
         kcore_compact_store,
         kcore_foreach_batch,
@@ -384,8 +383,8 @@ def test_kcore_compaction_invisible(spark):
     )
 
     ring = [(i, (i + 1) % 6) for i in range(6)]
-    out_a = tempfile.mkdtemp(prefix="rars_t_kcc_a_")
-    out_b = tempfile.mkdtemp(prefix="rars_t_kcc_b_")
+    out_a = str(tmp_path / "kcc_a")
+    out_b = str(tmp_path / "kcc_b")
     for out in (out_a, out_b):
         stage = kcore_foreach_batch(out, k=2, rounds=3)
         stage(spark.createDataFrame(ring[:3], "src long, dst long"), 0)
@@ -404,7 +403,7 @@ def test_kcore_compaction_invisible(spark):
     shutil.rmtree(out_b, ignore_errors=True)
 
 
-def test_pagerank_compaction_invisible(spark):
+def test_pagerank_compaction_invisible(spark, tmp_path):
     from rapids_and_rivers_spark.streaming.duals import (
         pagerank_compact_store,
         pagerank_foreach_batch,
@@ -413,8 +412,8 @@ def test_pagerank_compaction_invisible(spark):
 
     e1 = [("a", "b", 2.0), ("b", "a", 2.0), ("b", "c", 1.0), ("c", "b", 1.0)]
     e2 = [("c", "d", 1.0), ("d", "c", 1.0)]
-    out_a = tempfile.mkdtemp(prefix="rars_t_prc_a_")
-    out_b = tempfile.mkdtemp(prefix="rars_t_prc_b_")
+    out_a = str(tmp_path / "prc_a")
+    out_b = str(tmp_path / "prc_b")
     for out in (out_a, out_b):
         stage = pagerank_foreach_batch(out, iters_per_epoch=2)
         stage(
@@ -440,7 +439,7 @@ def test_pagerank_compaction_invisible(spark):
 # --------------------------------------------------------------------------
 
 
-def test_minhash_compaction_invisible(spark):
+def test_minhash_compaction_invisible(spark, tmp_path):
     from rapids_and_rivers_spark.streaming.duals import (
         minhash_compact_store,
         minhash_index_foreach_batch,
@@ -460,8 +459,8 @@ def test_minhash_compaction_invisible(spark):
     b3 = [(30, body.replace("quick", "swift"))]  # pairs with 1/2/20
     outs = {}
     for tag in ("a", "b"):
-        idx = tempfile.mkdtemp(prefix=f"rars_t_mhc_{tag}_i_")
-        pairs = tempfile.mkdtemp(prefix=f"rars_t_mhc_{tag}_p_")
+        idx = str(tmp_path / f"mhc_{tag}_i")
+        pairs = str(tmp_path / f"mhc_{tag}_p")
         stage = minhash_index_foreach_batch(idx, pairs, threshold=0.3)
         stage(spark.createDataFrame(b1, "doc_id long, text string"), 0)
         stage(spark.createDataFrame(b2, "doc_id long, text string"), 1)
@@ -483,7 +482,7 @@ def test_minhash_compaction_invisible(spark):
     assert any(a == 1 and b == 30 for (a, b, _j) in outs["b"])
 
 
-def test_ivf_compaction_invisible(spark):
+def test_ivf_compaction_invisible(spark, tmp_path):
     import numpy as np
 
     from rapids_and_rivers_spark.streaming.duals import (
@@ -502,7 +501,7 @@ def test_ivf_compaction_invisible(spark):
     )
 
     def run(compact):
-        idx = tempfile.mkdtemp(prefix="rars_t_ivfc_")
+        idx = str(tmp_path / f"ivfc_{compact}")
         stage = ivf_index_foreach_batch(idx, dim=64, n_cells=8)
         stage(cands.filter(F.col("neighbor_id") % 3 == 0), 0)
         stage(cands.filter(F.col("neighbor_id") % 3 == 1), 1)
@@ -530,7 +529,7 @@ def test_ivf_compaction_invisible(spark):
 # --------------------------------------------------------------------------
 
 
-def test_label_prop_compaction_invisible(spark):
+def test_label_prop_compaction_invisible(spark, tmp_path):
     """label_prop_compact_store was the only compactor without a
     dedicated contract-invisibility test (ADVICE r10): same shape as
     the kcore test — a CONTROL run and a compacted run must read
@@ -543,8 +542,8 @@ def test_label_prop_compaction_invisible(spark):
     )
 
     ring = [(i, (i + 1) % 6, 1.0) for i in range(6)]
-    out_a = tempfile.mkdtemp(prefix="rars_t_lpc_a_")
-    out_b = tempfile.mkdtemp(prefix="rars_t_lpc_b_")
+    out_a = str(tmp_path / "lpc_a")
+    out_b = str(tmp_path / "lpc_b")
     schema = "src long, dst long, weight double"
     for out in (out_a, out_b):
         stage = label_prop_foreach_batch(out, iters_per_epoch=3)
@@ -663,11 +662,11 @@ _GUARD_CASES = {
 
 
 @pytest.mark.parametrize("dual", list(_GUARD_CASES))
-def test_compaction_watermark_refuses_folded_epoch_replay(spark, dual):
+def test_compaction_watermark_refuses_folded_epoch_replay(spark, dual, tmp_path):
     import glob
 
     make_stage, compact, batch = _GUARD_CASES[dual]
-    out = tempfile.mkdtemp(prefix=f"rars_t_wmg_{dual}_")
+    out = str(tmp_path / f"wmg_{dual}")
     try:
         stage = make_stage(out)
         stage(batch(spark, 0), 0)
@@ -699,7 +698,7 @@ def test_compaction_watermark_refuses_folded_epoch_replay(spark, dual):
 # --------------------------------------------------------------------------
 
 
-def test_auto_compaction_bounds_dirs_over_long_run(spark):
+def test_auto_compaction_bounds_dirs_over_long_run(spark, tmp_path):
     from rapids_and_rivers_spark.streaming.duals import (
         auto_compacting,
         kcore_foreach_batch,
@@ -709,8 +708,8 @@ def test_auto_compaction_bounds_dirs_over_long_run(spark):
 
     n = 24
     ring = [(i, (i + 1) % n) for i in range(n)]
-    out_a = tempfile.mkdtemp(prefix="rars_t_apc_a_")
-    out_b = tempfile.mkdtemp(prefix="rars_t_apc_b_")
+    out_a = str(tmp_path / "apc_a")
+    out_b = str(tmp_path / "apc_b")
     max_dirs = 6
     peak_b = 0
     for out in (out_a, out_b):
@@ -735,7 +734,7 @@ def test_auto_compaction_bounds_dirs_over_long_run(spark):
     shutil.rmtree(out_b, ignore_errors=True)
 
 
-def test_semdedup_clustered_compaction_invisible(spark):
+def test_semdedup_clustered_compaction_invisible(spark, tmp_path):
     """The round-11 dual's store under its compactor + the scheduling
     wrapper: ingest 3 epochs with max_version_dirs=1 (trigger fires
     mid-stream), derived keep-list identical to the never-compacted
@@ -755,7 +754,7 @@ def test_semdedup_clustered_compaction_invisible(spark):
     )
     outs = {}
     for mode in ("control", "compacted"):
-        idx = tempfile.mkdtemp(prefix=f"rars_t_sdc_{mode}_")
+        idx = str(tmp_path / f"sdc_{mode}")
         stage = semdedup_clustered_foreach_batch(idx, dim=64, threshold=0.4)
         if mode == "compacted":
             stage = auto_compacting(stage, max_version_dirs=1)

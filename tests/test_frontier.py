@@ -6,7 +6,6 @@ the claimed algebraic property (mergeability / leakage invariant)
 pinned explicitly, replay idempotence for the stateful stage.
 """
 
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -105,10 +104,10 @@ def test_skyline_mergeability(spark):
     assert direct == merged
 
 
-def test_skyline_stream_equals_batch_and_replay(spark):
+def test_skyline_stream_equals_batch_and_replay(spark, tmp_path):
     rows = [(i, (i * 53) % 211, (i * 17) % 193) for i in range(1, 400)]
     df = _pts(spark, rows)
-    store = tempfile.mkdtemp(prefix="rars_t_sky_")
+    store = str(tmp_path / "sky")
     stage = skyline_foreach_batch(store, bucket_width=16)
     stage(df.filter(F.col("id") % 3 == 0), 0)
     stage(df.filter(F.col("id") % 3 == 1), 1)
@@ -180,7 +179,7 @@ def _baskets_df(spark, n=400):
     return spark.createDataFrame(rows, "basket int, item string")
 
 
-def test_assoc_compaction_contract_invisible(spark):
+def test_assoc_compaction_contract_invisible(spark, tmp_path):
     """Reader output identical before/after compaction; file count
     collapses; ingest AFTER compaction still anti-joins correctly
     against the compacted memberships (no double counting)."""
@@ -191,8 +190,8 @@ def test_assoc_compaction_contract_invisible(spark):
     )
 
     df = _baskets_df(spark)
-    out_a = tempfile.mkdtemp(prefix="rars_t_cp_a_")
-    out_b = tempfile.mkdtemp(prefix="rars_t_cp_b_")
+    out_a = str(tmp_path / "cp_a")
+    out_b = str(tmp_path / "cp_b")
     for out in (out_a, out_b):
         stage = assoc_items_foreach_batch(out, expected_items=1000)
         stage(df.filter(F.col("basket") % 3 == 0), 0)
@@ -206,7 +205,7 @@ def test_assoc_compaction_contract_invisible(spark):
     assert _count_files(out_b) < _count_files(out_a)
 
 
-def test_compaction_resumes_after_simulated_crash(spark):
+def test_compaction_resumes_after_simulated_crash(spark, tmp_path):
     """Crash between the _SUCCESS-gated temp write and the swap: the
     next call must finish the swap without rebuilding or losing rows."""
     import os
@@ -217,7 +216,7 @@ def test_compaction_resumes_after_simulated_crash(spark):
     )
 
     df = _baskets_df(spark)
-    out = tempfile.mkdtemp(prefix="rars_t_cp_crash_")
+    out = str(tmp_path / "cp_crash")
     stage = assoc_items_foreach_batch(out, expected_items=1000)
     stage(df.filter(F.col("basket") % 2 == 0), 0)
     stage(df.filter(F.col("basket") % 2 == 1), 1)
@@ -251,7 +250,7 @@ def test_compaction_resumes_after_simulated_crash(spark):
     assert eps == ["epoch=1"]
 
 
-def test_versioned_delta_compaction_resumes_after_delete_crash(spark):
+def test_versioned_delta_compaction_resumes_after_delete_crash(spark, tmp_path):
     """ADVICE r9 (high): crash AFTER the delete loop removed every v*
     dir but BEFORE the rename — a re-run finds versions empty with a
     completed _compact_tmp_v{E} pending. The old code early-returned
@@ -266,7 +265,7 @@ def test_versioned_delta_compaction_resumes_after_delete_crash(spark):
     )
 
     df = _baskets_df(spark)
-    out = tempfile.mkdtemp(prefix="rars_t_vd_crash_")
+    out = str(tmp_path / "vd_crash")
     stage = assoc_items_foreach_batch(out, expected_items=1000)
     stage(df.filter(F.col("basket") % 2 == 0), 0)
     stage(df.filter(F.col("basket") % 2 == 1), 1)

@@ -9,7 +9,6 @@ discipline), and (c) replay idempotence for the stateful stages.
 
 import math
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -69,11 +68,11 @@ def test_association_rules_thresholds_prune(spark):
     assert len(rules) == 2  # a->b and b->a only
 
 
-def test_assoc_stream_equals_batch_and_replay(spark):
+def test_assoc_stream_equals_batch_and_replay(spark, tmp_path):
     """Baskets straddling epochs: pair counted once, at the later
     member's arrival; replaying an epoch changes nothing."""
     bi = _baskets(spark).withColumn("par", F.pmod(F.xxhash64(F.col("item")), F.lit(2)))
-    store = tempfile.mkdtemp(prefix="rars_t_assoc_")
+    store = str(tmp_path / "assoc")
     stage = assoc_items_foreach_batch(store, expected_items=8)
     stage(bi.filter(F.col("par") == 0).select("basket", "item"), 0)
     stage(bi.filter(F.col("par") == 1).select("basket", "item"), 1)
@@ -92,12 +91,12 @@ def test_assoc_stream_equals_batch_and_replay(spark):
     assert sorted(map(tuple, replay)) == sorted(map(tuple, want))
 
 
-def test_assoc_stream_duplicate_membership_across_epochs(spark):
+def test_assoc_stream_duplicate_membership_across_epochs(spark, tmp_path):
     """The same (basket, item) arriving again in a later epoch must NOT
     double-count (monotone store by anti-join)."""
     rows0 = [(1, "a"), (1, "b")]
     rows1 = [(1, "a"), (1, "c")]  # (1,a) repeats
-    store = tempfile.mkdtemp(prefix="rars_t_assoc_dup_")
+    store = str(tmp_path / "assoc_dup")
     stage = assoc_items_foreach_batch(store, expected_items=4)
     stage(spark.createDataFrame(rows0, "basket int, item string"), 0)
     stage(spark.createDataFrame(rows1, "basket int, item string"), 1)
@@ -151,9 +150,9 @@ def test_stump_stats_merge_property(spark):
     assert merged == full
 
 
-def test_stump_stream_equals_batch(spark):
+def test_stump_stream_equals_batch(spark, tmp_path):
     df = _labeled(spark)
-    out_dir = tempfile.mkdtemp(prefix="rars_t_stump_")
+    out_dir = str(tmp_path / "stump")
     stage = stump_stats_foreach_batch(out_dir, ["x", "z"], "y")
     stage(df.filter(F.col("z") == 0), 0)
     stage(df.filter(F.col("z") == 1), 1)
@@ -278,7 +277,7 @@ def test_kcenter_radius_is_monotone_nonincreasing(spark):
     assert len({c for _, c, _ in trace}) == 5  # distinct centers
 
 
-def test_ses_stream_equals_batch_with_split_days(spark):
+def test_ses_stream_equals_batch_with_split_days(spark, tmp_path):
     """A day whose rows straddle epochs must still sum exactly before
     the fold (mergeable daily buckets)."""
     from rapids_and_rivers_spark.streaming.duals import (
@@ -288,7 +287,7 @@ def test_ses_stream_equals_batch_with_split_days(spark):
 
     rows = [("k", 1, 40), ("k", 1, 60), ("k", 2, 200), ("k", 3, 150), ("k", 3, 250)]
     df = spark.createDataFrame(rows, "key string, day int, cents long")
-    out = tempfile.mkdtemp(prefix="rars_t_ses_")
+    out = str(tmp_path / "ses")
     stage = ses_daily_foreach_batch(out)
     # split so days 1 and 3 straddle epochs
     stage(spark.createDataFrame(rows[::2], "key string, day int, cents long"), 0)
@@ -385,7 +384,7 @@ def test_cusum_negative_total_no_alarm_storm(spark):
     assert cusum_alarms(zero).count() == 0
 
 
-def test_cusum_stream_equals_batch(spark):
+def test_cusum_stream_equals_batch(spark, tmp_path):
     """One daily store, two readers: the CUSUM reader over the merged
     epochs equals batch alarms over the union (all-integer merge)."""
     from rapids_and_rivers_spark.operators.forecast import cusum_alarms
@@ -396,7 +395,7 @@ def test_cusum_stream_equals_batch(spark):
 
     rows = [("k", d, (100 if d <= 10 else 300) + (d % 3)) for d in range(1, 21)]
     df = spark.createDataFrame(rows, "key string, day int, cents long")
-    out = tempfile.mkdtemp(prefix="rars_t_cusum_")
+    out = str(tmp_path / "cusum")
     stage = ses_daily_foreach_batch(out)
     stage(df.filter(F.col("day") % 2 == 0), 0)
     stage(df.filter(F.col("day") % 2 == 1), 1)
@@ -442,10 +441,10 @@ def test_adamic_adar_recovers_held_out_edges(spark):
     assert {(r["node_a"], r["node_b"]) for r in top} == held_out
 
 
-def test_assoc_stream_empty_first_epoch(spark):
+def test_assoc_stream_empty_first_epoch(spark, tmp_path):
     """An empty epoch-0 batch leaves a part-file-less store; epoch 1
     must not crash on schema inference over it."""
-    store = tempfile.mkdtemp(prefix="rars_t_assoc_empty_")
+    store = str(tmp_path / "assoc_empty")
     stage = assoc_items_foreach_batch(store, expected_items=4)
     empty = spark.createDataFrame([], "basket int, item string")
     stage(empty, 0)

@@ -38,6 +38,29 @@ def test_test_rapid_roundtrip_and_inspector(spark):
     assert rapid.inspector.size == 0 and rapid.verdict_log == []
 
 
+def test_test_rapid_passes_metadata_to_a_three_parameter_listener(spark):
+    """TestRapid honours the streaming runtime's listener contract: a
+    listener declaring a third parameter gets the record's
+    MessageMetadata, a two-parameter listener on the same river does not."""
+    from rapids_and_rivers_spark.streaming.runtime import MessageMetadata
+
+    rapid = InMemoryRapid(spark)
+    river = River("meta").validate(P.require_key("a"))
+    seen = []
+
+    def with_meta(packet, ctx, meta):
+        seen.append(meta)
+
+    def without_meta(packet, ctx):
+        seen.append("two-arg")
+
+    river.on_packet(with_meta)
+    river.on_packet(without_meta)
+    rapid.register(river)
+    rapid.send_test_message(json.dumps({"a": 1}), key="k1")
+    assert seen == [MessageMetadata(key="k1"), "two-arg"]
+
+
 def test_publish_many_splits_sent_and_failed():
     class FlakyRapid(AbstractRapid):
         def publish(self, message, key=None):

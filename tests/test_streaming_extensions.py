@@ -3599,3 +3599,31 @@ def test_catalog_codebook_duals_raise_no_false_recluster_event(spark, query):
         rows = catalog.queries()[query](spark, sf_dir()).collect()
     assert rows
     assert not [w for w in caught if "re-cluster event" in str(w.message)]
+
+
+def test_catalog_state_root_is_removed_at_exit(tmp_path):
+    """Every stream query's store dir is a fresh dir under one
+    per-process root, and the catalog's exit hook removes that root with
+    everything written under it."""
+    import subprocess
+    import sys
+
+    script = (
+        "import json\n"
+        "from rapids_and_rivers_spark import catalog\n"
+        "a, b = catalog._state_dir('q'), catalog._state_dir('q')\n"
+        "open(a + '/part-0.parquet', 'w').write('x')\n"
+        "print(json.dumps([catalog._state_root(), a, b]))\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    root, a, b = json.loads(r.stdout)
+    assert os.path.dirname(root) == str(tmp_path)
+    assert a != b and os.path.dirname(a) == os.path.dirname(b) == root
+    assert not os.path.exists(root) and not list(tmp_path.iterdir())
