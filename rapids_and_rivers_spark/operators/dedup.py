@@ -285,10 +285,12 @@ def jaccard(a: Column, b: Column) -> Column:
     return inter / F.nullif(union, F.lit(0)).cast("double")
 
 
-def lsh_candidate_pairs(
-    base: DataFrame, num_hashes: int = 32, bands: int = 8
-) -> DataFrame:
-    """LSH band-bucket candidate pairs over a (id, sig) signature table.
+def band_hashes(base: DataFrame, num_hashes: int = 32, bands: int = 8) -> DataFrame:
+    """The LSH banding of an (id, sig) MinHash signature table, shared by
+    :func:`lsh_candidate_pairs` and the streaming MinHash index
+    (streaming/duals.py): ``(id, band, band_hash)``, one row per band,
+    ``band_hash`` = xxhash64 of the band's ``num_hashes/bands``
+    signature slots.
 
     Bands carry only (id, band, band_hash) — wide signature/shingle arrays
     are NOT duplicated through the explode/join. ``explode_outer``: the
@@ -302,11 +304,9 @@ def lsh_candidate_pairs(
     an O(D²) candidate blow-up at scale (verification would drop them,
     but only after materializing the pairs). With the guard, degenerate
     docs produce zero candidates.
-
-    Output: (id_a, id_b) with id_a < id_b, deduplicated across bands.
     """
     rows_per_band = num_hashes // bands
-    banded = base.filter(F.col("sig").isNotNull()).select(
+    return base.filter(F.col("sig").isNotNull()).select(
         "id",
         F.explode_outer(
             F.array(
@@ -325,6 +325,17 @@ def lsh_candidate_pairs(
             )
         ).alias("bb"),
     ).select("id", "bb.band", "bb.band_hash")
+
+
+def lsh_candidate_pairs(
+    base: DataFrame, num_hashes: int = 32, bands: int = 8
+) -> DataFrame:
+    """LSH band-bucket candidate pairs over a (id, sig) signature table:
+    a self-join of its :func:`band_hashes` on (band, band_hash).
+
+    Output: (id_a, id_b) with id_a < id_b, deduplicated across bands.
+    """
+    banded = band_hashes(base, num_hashes, bands)
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -336,6 +347,25 @@ def lsh_candidate_pairs(
         )
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def jaccard_verify(
+    cand: DataFrame, shingles: DataFrame, threshold: float, ndigits: int = 4
+) -> DataFrame:
+    """The exact verify step of every near-duplicate path, batch and
+    stream: candidate pairs ``cand (id_a, id_b)`` joined twice onto the
+    ``shingles (id, shingles)`` sets, scored by :func:`jaccard` rounded
+    to ``ndigits`` and kept at ``>= threshold``. Output ``(id_a, id_b,
+    jaccard)``."""
+    a = shingles.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
+    b = shingles.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
+    return (
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), ndigits))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -370,25 +400,7 @@ def minhash_lsh_pairs(
         .persist()
     )
     candidates = lsh_candidate_pairs(base, num_hashes=num_hashes, bands=bands)
-    shingle_sets = base.select("id", "shingles")
-    verified = (
-        candidates.join(
-            shingle_sets.select(
-                F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")
-            ),
-            "id_a",
-        )
-        .join(
-            shingle_sets.select(
-                F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")
-            ),
-            "id_b",
-        )
-        .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), ndigits))
-    )
-    return verified.filter(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
-    )
+    return jaccard_verify(candidates, base, threshold, ndigits)
 
 
 def ngram_jaccard_pairs(
@@ -565,16 +577,7 @@ def prefix_filter_pairs(
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .distinct()
     )
-    a = base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = base.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    verified = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), ndigits))
-    )
-    return verified.filter(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
-    )
+    return jaccard_verify(cand, base, threshold, ndigits)
 
 
 def contamination_check(
@@ -796,7 +799,9 @@ def duplicate_clusters(
     early via a per-iteration changed-count check — an iterative algorithm
     by nature, so the driver-side loop is the correct shape (each pass is
     fully distributed). Production-hardened variants (large-star/small-star)
-    drop in here unchanged.
+    drop in here unchanged. Raises ``RuntimeError`` when labels still
+    change in round ``max_iter`` (a graph diameter above it), rather than
+    return unfinished components.
 
     Output: (node, cluster) for every id that appears in ``pairs``.
     """
@@ -838,6 +843,13 @@ def duplicate_clusters(
         labels = new_labels.select("u", "label")
         if changed == 0:
             break
+    else:
+        # labels still moving after max_iter rounds are unfinished
+        # components (one round per unit of graph diameter); fail
+        # loudly like duplicate_clusters_star instead of returning them
+        raise RuntimeError(
+            f"min-label propagation did not converge within {max_iter} rounds"
+        )
     return labels.select(F.col("u").alias("node"), F.col("label").alias("cluster"))
 
 
@@ -1617,29 +1629,17 @@ def semantic_dedup_clustered(
     same output contract as :func:`semantic_dedup`.
     """
     from rapids_and_rivers_spark.operators.similarity import (
-        codebook_sample_order,
+        codebook_sample,
         lloyd_codebook,
     )
 
     if codebook is None:
         if n_cells is None:
-            # cell-count sizing: one global count() aggregate — not a
-            # DataFrame.collect, so no bounded-collect marker (the
-            # growth audit attributes the FIRST marker in its window
-            # to the codebook-class sample collect below)
             n_cells = adaptive_cell_count(
                 df.count(), target_cluster_rows=target_cluster_rows
             )
-        # bounded-collect: sample_per_cell * n_cells codebook-sample rows
-        # (KB-scale) — the build_codebook_table class
-        sampled = (
-            df.select(id_col, emb_col)
-            .orderBy(codebook_sample_order(id_col, seed))
-            .limit(sample_per_cell * n_cells)
-            .collect()
-        )
         codebook = lloyd_codebook(
-            [list(r[emb_col]) for r in sampled],
+            codebook_sample(df, id_col, emb_col, sample_per_cell * n_cells, seed),
             dim,
             n_cells,
             lloyd_iters,

@@ -18,6 +18,7 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql.types import ArrayType
 
 
 def as_double_array(col: Column) -> Column:
@@ -36,6 +37,22 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def _int_dot(a: Column, b: Column) -> Column:
+    """Exact dot product of two integer arrays: an int64 fold, so every
+    engine reproduces it bit-for-bit."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _quantized(vec: Column, scale: int) -> Column:
+    """``floor(v * scale)`` per component: the integer grid the exact
+    re-rank (and the Matryoshka prefix pass) scores on."""
+    return F.transform(vec, lambda x: F.floor(x * scale))
 
 
 def centroid_terms(
@@ -89,11 +106,23 @@ def brute_force_topk(
     """
     q = queries.withColumn("q_nrm", norm(F.col("q_emb")))
     c = candidates.withColumn("c_nrm", norm(F.col("c_emb")))
-    paired = c.crossJoin(F.broadcast(q))
-    # norms precomputed per row (not per pair): cosine costs ONE array pass
-    # dot via the Arrow-batched sequential-fold kernel (dot_rows) —
-    # bit-identical to the HOF fold; the per-pair interpreted fold
-    # dominated the verify stage (guide §4.2)
+    return _cosine_topk(
+        c.crossJoin(F.broadcast(q)), k, query_id, cand_id, ndigits
+    )
+
+
+def _cosine_topk(
+    paired: DataFrame, k: int, query_id: str, cand_id: str, ndigits: int
+) -> DataFrame:
+    """The exact cosine refine step of :func:`brute_force_topk`,
+    :func:`ivf_probe_rank` and :func:`lsh_topk`: over (query, candidate)
+    rows carrying ``q_emb``/``q_nrm`` and ``c_emb``/``c_nrm``, the
+    cosine rounded to ``ndigits`` and each query's ``k`` best under
+    ``(cos DESC, cand_id)``. Output ``(query_id, cand_id, cos)``."""
+    # norms precomputed per row (not per pair): cosine costs ONE array
+    # pass, the dot via the Arrow-batched sequential-fold kernel
+    # (dot_rows) — bit-identical to the HOF fold; the per-pair
+    # interpreted fold dominated the verify stage (guide §4.2)
     cos = F.round(
         dot_rows(F.col("q_emb"), F.col("c_emb"))
         / (F.col("q_nrm") * F.col("c_nrm")),
@@ -319,6 +348,22 @@ def codebook_sample_order(cand_id: str = "neighbor_id", seed: int = 13) -> Colum
     return F.md5(F.concat(F.lit(f"s{seed}-"), F.col(cand_id).cast("string")))
 
 
+def codebook_sample(
+    df: DataFrame, id_col: str, emb_col: str, n: int, seed: int = 13
+) -> list[list[float]]:
+    """The codebook-training sample of every quantizer here: the first
+    ``n`` vectors of ``df`` in :func:`codebook_sample_order` — one
+    linear TakeOrdered heap pass, no shuffle."""
+    # bounded-collect: n codebook-sample rows (KB-scale by construction)
+    rows = (
+        df.select(id_col, emb_col)
+        .orderBy(codebook_sample_order(id_col, seed))
+        .limit(n)
+        .collect()
+    )
+    return [list(r[emb_col]) for r in rows]
+
+
 def build_codebook_table(
     candidates: DataFrame,
     dim: int,
@@ -340,15 +385,11 @@ def build_codebook_table(
     sample order (:func:`codebook_sample_order`) and optional ``quantize``
     grid make it reproducible by a pure-SQL oracle in ANY engine.
     """
-    sampled = (
-        candidates.select(cand_id, emb_col)
-        .orderBy(codebook_sample_order(cand_id, seed))
-        .limit(sample_per_cell * n_cells)
-        .collect()
+    sample = codebook_sample(
+        candidates, cand_id, emb_col, sample_per_cell * n_cells, seed
     )
     cents = lloyd_codebook(
-        [list(r[emb_col]) for r in sampled], dim, n_cells, lloyd_iters, seed,
-        quantize=quantize,
+        sample, dim, n_cells, lloyd_iters, seed, quantize=quantize
     )
     spark = candidates.sparkSession
     return spark.createDataFrame(
@@ -465,15 +506,10 @@ def ivf_topk(
         if len(cents) != n_cells:
             raise ValueError(f"codebook has {len(cents)} cells, expected {n_cells}")
     else:
-        sampled = (
-            candidates.select(cand_id, "c_emb")
-            .orderBy(codebook_sample_order(cand_id, seed))
-            .limit(sample_per_cell * n_cells)
-            .collect()
+        sample = codebook_sample(
+            candidates, cand_id, "c_emb", sample_per_cell * n_cells, seed
         )
-        cents = lloyd_codebook(
-            [list(r["c_emb"]) for r in sampled], dim, n_cells, lloyd_iters, seed
-        )
+        cents = lloyd_codebook(sample, dim, n_cells, lloyd_iters, seed)
 
     # candidates: argmax cell (array_position is 1-based; ties -> first)
     c = assign_cells(candidates, cents, emb_col="c_emb")
@@ -560,21 +596,8 @@ def ivf_probe_rank(
             F.explode(F.col("__probe")).alias("cell"),
         )
     )
-    paired = c.join(F.broadcast(q), "cell")
-    # dot via the Arrow-batched sequential-fold kernel (dot_rows) —
-    # bit-identical to the HOF fold; the per-pair interpreted fold
-    # dominated the verify stage (guide §4.2)
-    cos = F.round(
-        dot_rows(F.col("q_emb"), F.col("c_emb"))
-        / (F.col("q_nrm") * F.col("c_nrm")),
-        ndigits,
-    )
-    w = W.partitionBy(query_id).orderBy(F.col("cos").desc(), F.col(cand_id))
-    return (
-        paired.withColumn("cos", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id, cand_id, "cos")
+    return _cosine_topk(
+        c.join(F.broadcast(q), "cell"), k, query_id, cand_id, ndigits
     )
 
 
@@ -631,21 +654,7 @@ def lsh_topk(
         .select(query_id, cand_id, "q_emb", "c_emb", "q_nrm", "c_nrm")
         .dropDuplicates([query_id, cand_id])
     )
-    # dot via the Arrow-batched sequential-fold kernel (dot_rows) —
-    # bit-identical to the HOF fold; the per-pair interpreted fold
-    # dominated the verify stage (guide §4.2)
-    cos = F.round(
-        dot_rows(F.col("q_emb"), F.col("c_emb"))
-        / (F.col("q_nrm") * F.col("c_nrm")),
-        ndigits,
-    )
-    w = W.partitionBy(query_id).orderBy(F.col("cos").desc(), F.col(cand_id))
-    return (
-        paired.withColumn("cos", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id, cand_id, "cos")
-    )
+    return _cosine_topk(paired, k, query_id, cand_id, ndigits)
 
 
 # --- product quantization (PQ) -----------------------------------------------
@@ -775,6 +784,127 @@ def pq_codebooks(
     ]
 
 
+# --- two-pass quantized top-k (PQ, SQ8, 1-bit, Matryoshka) -------------------
+#
+# Every quantized tier is the same filter-and-refine pipeline: collect the
+# (broadcast-scale) query batch once, score every candidate against the
+# whole batch in ONE per-candidate array (the tier's own first-pass score),
+# posexplode it into (query, candidate) rows, keep each query's top-k —
+# or its top-R shortlist, re-ranked by the exact quantized inner product.
+# Only the first-pass score differs between tiers.
+
+
+def _fan_out(
+    queries: DataFrame,
+    candidates: DataFrame,
+    query_id: str,
+    cand_id: str,
+    q_code: Column,
+    scores,
+) -> DataFrame:
+    """The first pass of a quantized tier: ``(query_id, cand_id,
+    __score)``, one row per (query, candidate).
+
+    The query batch ``(query_id, q_code)`` is collected once — callers
+    pass a broadcast-scale query set, so it rides the plan as literals
+    and the candidates stay partitioned in place (no join, no shuffle
+    before the per-query window). ``scores(codes)`` maps the collected
+    query codes (in batch order) to a per-candidate array column of
+    first-pass scores in that same order. Query ids come back with the
+    query frame's own ``query_id`` type (a ``bigint`` id below 2^31
+    would otherwise turn into an ``int`` literal)."""
+    # bounded-collect: the query batch — a broadcast-scale query set
+    rows = queries.select(query_id, q_code.alias("__qc")).collect()
+    qids = F.array(*[F.lit(r[query_id]) for r in rows]).cast(
+        ArrayType(queries.schema[query_id].dataType)
+    )
+    return (
+        candidates.withColumn("__scores", scores([list(r["__qc"]) for r in rows]))
+        .select(cand_id, F.posexplode("__scores").alias("__qi", "__score"))
+        .select(
+            F.element_at(qids, F.col("__qi") + 1).alias(query_id),
+            F.col(cand_id),
+            F.col("__score"),
+        )
+    )
+
+
+def _per_query(pair_score):
+    """``scores`` for :func:`_fan_out` when a tier scores each (query
+    code, candidate) pair in SQL: the query codes become an integer
+    array literal and ``pair_score(query_code)`` runs once per query
+    inside one ``transform`` — whole-stage codegen, no Python."""
+
+    def scores(codes: list) -> Column:
+        lits = F.array(*[F.array(*[F.lit(int(v)) for v in c]) for c in codes])
+        return F.transform(lits, pair_score)
+
+    return scores
+
+
+def _shortlist_topk(
+    first: DataFrame,
+    queries: DataFrame,
+    candidates: DataFrame,
+    query_id: str,
+    cand_id: str,
+    topk: int,
+    rerank: int,
+    rerank_scale: int,
+    order: Column | None = None,
+    score: Column | None = None,
+) -> DataFrame:
+    """The refine step of every quantized tier over its :func:`_fan_out`
+    rows. Output ``(query_id, cand_id, score double)`` in both modes.
+
+    Ranks each query's rows by ``order`` (default: the first-pass
+    ``__score``), ties on the candidate id. Without rerank it keeps the
+    top ``topk`` and reports ``score`` (default: ``__score`` as a
+    double). ``rerank=R`` is the exact re-ranking stage of IVFADC+R
+    (Jégou, Tavenard, Douze & Amsaleg, ICASSP 2011): the top-``R``
+    shortlist (nq*R rows, KB-scale) is BROADCAST back against the
+    candidates (the corpus stays in place, no vector crosses a shuffle)
+    and the final ``topk`` is ordered by the exact quantized integer
+    inner product ``sum floor(q_i*s)*floor(c_i*s)`` with
+    ``s = rerank_scale``. The products keep it integral and < 2^53, so
+    the double score is lossless and bit-stable in any engine."""
+    if rerank and rerank <= topk:
+        # a positive rerank no bigger than topk is a no-op shortlist —
+        # silently returning un-reranked first-pass scores would mask a
+        # caller bug (ADVICE r6), so reject it loudly
+        raise ValueError(
+            f"rerank ({rerank}) must exceed topk ({topk}) to widen the "
+            "shortlist; pass rerank=0 to skip the exact rerank stage"
+        )
+    first_score = F.col("__score")
+    w = W.partitionBy(query_id).orderBy(
+        (first_score if order is None else order).desc(), F.col(cand_id)
+    )
+    ranked = first.withColumn("rn", F.row_number().over(w))
+    if not rerank:
+        return ranked.filter(F.col("rn") <= topk).select(
+            query_id,
+            cand_id,
+            (first_score.cast("double") if score is None else score).alias("score"),
+        )
+    shortlist = ranked.filter(F.col("rn") <= rerank).select(query_id, cand_id)
+    ip = _int_dot(
+        _quantized(F.col("q_emb"), rerank_scale),
+        _quantized(F.col("c_emb"), rerank_scale),
+    )
+    paired = (
+        candidates.join(F.broadcast(shortlist), cand_id)
+        .join(F.broadcast(queries.select(query_id, "q_emb")), query_id)
+        .withColumn("ip", ip)
+    )
+    w2 = W.partitionBy(query_id).orderBy(F.col("ip").desc(), F.col(cand_id))
+    return (
+        paired.withColumn("rn2", F.row_number().over(w2))
+        .filter(F.col("rn2") <= topk)
+        .select(query_id, cand_id, F.col("ip").cast("double").alias("score"))
+    )
+
+
 def pq_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -819,22 +949,12 @@ def pq_topk(
 
     Output: ``(query_id, neighbor_id, score double)`` — the SAME schema
     in both modes (ADVICE r5: callers toggling ``rerank`` must not see a
-    column/type change). Without rerank, ``score`` is the approximate
-    ADC inner product rounded to ``ndigits``; with rerank it is the
-    exact quantized integer inner product (cast to double — the
-    ``floor(v*rerank_scale)`` products keep it integral and < 2^53, so
-    the cast is lossless and bit-stable).
-
-    ``rerank=R`` (R > topk) adds the exact re-ranking stage of
-    IVFADC+R (Jégou, Tavenard, Douze & Amsaleg, "Searching in one
-    billion vectors", ICASSP 2011): the ADC pass keeps a top-``R``
-    shortlist per query, the shortlist (nq*R rows — KB-scale) is
-    BROADCAST back against the candidates (corpus stays in place, no
-    shuffle), and the final top-``topk`` is ordered by the EXACT
-    quantized inner product ``sum floor(q_i*s)*floor(c_i*s)`` — an
-    integer every engine reproduces bit-for-bit, so the reranked mode
-    keeps the full value oracle while recall@topk rises to the ADC's
-    recall@R.
+    column/type change; the :func:`_shortlist_topk` contract). Without
+    rerank, ``score`` is the approximate ADC inner product rounded to
+    ``ndigits``; ``rerank=R`` (R > topk) re-ranks the ADC top-``R``
+    shortlist by the exact quantized integer inner product
+    (:func:`_shortlist_topk`), which keeps the full value oracle while
+    recall@topk rises to the ADC's recall@R.
     """
     import numpy as np
     import pandas as pd
@@ -855,87 +975,42 @@ def pq_topk(
         action=bits_action,
     )
     if codebooks is None:
-        sampled = (
-            candidates.select(cand_id, "c_emb")
-            .orderBy(codebook_sample_order(cand_id, seed))
-            .limit(sample_n)
-            .collect()
-        )
         codebooks = pq_codebooks(
-            [list(r["c_emb"]) for r in sampled], dim, m, k_cells, iters, seed,
-            quantize,
+            codebook_sample(candidates, cand_id, "c_emb", sample_n, seed),
+            dim, m, k_cells, iters, seed, quantize,
         )
     CB = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
     penal = [0.5 * (C**2).sum(axis=1) for C in CB]
 
-    # bounded-collect: the PQ query batch — callers pass a
-    # broadcast-scale query set (the brute_force_topk contract)
-    qrows = queries.select(query_id, "q_emb").collect()
-    qids = [r[query_id] for r in qrows]
-    Q = np.asarray([list(r["q_emb"]) for r in qrows], dtype=np.float64)
-    # LUT[(qi, s, cell)] = dot(q_sub, centroid) — nq x m x k doubles
-    lut = np.stack(
-        [Q[:, s * sub : (s + 1) * sub] @ CB[s].T for s in range(m)], axis=1
-    )
+    def adc_scores(q_embs: list) -> Column:
+        Q = np.asarray(q_embs, dtype=np.float64)
+        # LUT[(qi, s, cell)] = dot(q_sub, centroid) — nq x m x k doubles
+        lut = np.stack(
+            [Q[:, s * sub : (s + 1) * sub] @ CB[s].T for s in range(m)], axis=1
+        )
 
-    @pandas_udf("array<double>")
-    def _adc(v):
-        if not len(v):
-            return pd.Series([], dtype=object)
-        X = np.vstack(v.to_numpy())
-        out = np.zeros((len(X), len(Q)))
-        for s in range(m):
-            xs = X[:, s * sub : (s + 1) * sub]
-            codes = snap_scores(xs @ CB[s].T - penal[s]).argmax(axis=1)
-            out += lut[:, s, codes].T  # fixed subspace order = SQL's + chain
-        return pd.Series(list(out))
+        @pandas_udf("array<double>")
+        def _adc(v):
+            if not len(v):
+                return pd.Series([], dtype=object)
+            X = np.vstack(v.to_numpy())
+            out = np.zeros((len(X), len(Q)))
+            for s in range(m):
+                xs = X[:, s * sub : (s + 1) * sub]
+                codes = snap_scores(xs @ CB[s].T - penal[s]).argmax(axis=1)
+                out += lut[:, s, codes].T  # fixed subspace order = SQL's + chain
+            return pd.Series(list(out))
 
-    qid_arr = F.array(*[F.lit(q) for q in qids])
-    exploded = (
-        candidates.withColumn("__adcs", _adc(F.col("c_emb")))
-        .select(cand_id, F.posexplode("__adcs").alias("__qi", "__adc"))
-        .select(
-            F.element_at(qid_arr, F.col("__qi") + 1).alias(query_id),
-            F.col(cand_id),
-            F.col("__adc"),
-        )
+        return _adc(F.col("c_emb"))
+
+    first = _fan_out(
+        queries, candidates, query_id, cand_id, F.col("q_emb"), adc_scores
     )
-    w = W.partitionBy(query_id).orderBy(
-        snap_dot_col(F.col("__adc")).desc(), F.col(cand_id)
-    )
-    ranked = exploded.withColumn("rn", F.row_number().over(w))
-    if rerank and rerank <= topk:
-        # a positive rerank no bigger than topk is a no-op shortlist —
-        # silently returning un-reranked first-pass scores would mask a
-        # caller bug (ADVICE r6), so reject it loudly
-        raise ValueError(
-            f"rerank ({rerank}) must exceed topk ({topk}) to widen the "
-            "shortlist; pass rerank=0 to skip the exact rerank stage"
-        )
-    if not rerank:
-        return ranked.filter(F.col("rn") <= topk).select(
-            query_id, cand_id, F.round("__adc", ndigits).alias("score")
-        )
-    # IVFADC+R exact re-rank: broadcast the nq*R shortlist against the
-    # candidates (corpus unshuffled), score with the exact quantized
-    # integer inner product, keep topk under (ip DESC, cand_id)
-    shortlist = ranked.filter(F.col("rn") <= rerank).select(query_id, cand_id)
-    qz = lambda c: F.transform(c, lambda x: F.floor(x * rerank_scale))
-    ip = F.aggregate(
-        F.zip_with(qz(F.col("q_emb")), qz(F.col("c_emb")), lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    paired = (
-        candidates.join(F.broadcast(shortlist), cand_id)
-        .join(F.broadcast(queries.select(query_id, "q_emb")), query_id)
-        .withColumn("ip", ip)
-    )
-    w2 = W.partitionBy(query_id).orderBy(F.col("ip").desc(), F.col(cand_id))
-    return (
-        paired.withColumn("rn2", F.row_number().over(w2))
-        .filter(F.col("rn2") <= topk)
-        .select(query_id, cand_id, F.col("ip").cast("double").alias("score"))
+    return _shortlist_topk(
+        first, queries, candidates, query_id, cand_id, topk, rerank,
+        rerank_scale,
+        order=snap_dot_col(F.col("__score")),
+        score=F.round(F.col("__score"), ndigits),
     )
 
 
@@ -961,15 +1036,9 @@ def build_pq_codebook_table(
     re-sampling. Deterministic for fixed (seed, corpus); grid-quantized
     so it survives a parquet round-trip bit-exactly (pinned by test).
     """
-    sampled = (
-        candidates.select(cand_id, emb_col)
-        .orderBy(codebook_sample_order(cand_id, seed))
-        .limit(sample_n)
-        .collect()
-    )
     books = pq_codebooks(
-        [list(r[emb_col]) for r in sampled], dim, m, k_cells, iters, seed,
-        quantize,
+        codebook_sample(candidates, cand_id, emb_col, sample_n, seed),
+        dim, m, k_cells, iters, seed, quantize,
     )
     spark = candidates.sparkSession
     return spark.createDataFrame(
@@ -1031,9 +1100,7 @@ def mmr_rerank(
     """
     import pandas as pd
 
-    quant = lambda c: F.transform(
-        as_double_array(c), lambda x: F.floor(x * scale).cast("bigint")
-    )
+    quant = lambda c: _quantized(as_double_array(c), scale)
     sq_norm = lambda c: F.aggregate(
         F.transform(c, lambda x: x * x), F.lit(0).cast("bigint"), lambda a, x: a + x
     )
@@ -1043,14 +1110,10 @@ def mmr_rerank(
     c = candidates.select(
         F.col(cand_id).alias("cid"), quant(F.col(vec_c)).alias("cv")
     ).withColumn("cn2", sq_norm(F.col("cv")))
-    qdot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda a, x: a + x,
-    )
     paired = c.join(F.broadcast(q)).withColumn(
         "rel",
-        qdot / F.sqrt((F.col("qn2") * F.col("cn2")).cast("double")),
+        _int_dot(F.col("qv"), F.col("cv"))
+        / F.sqrt((F.col("qn2") * F.col("cn2")).cast("double")),
     )
     w = W.partitionBy("qid").orderBy(F.desc("rel"), "cid")
     pool = (
@@ -1320,14 +1383,8 @@ def knn_self_join(
     # neighbors nor targets
     df = df.filter(F.col(emb_col).isNotNull() & (F.size(F.col(emb_col)) == dim))
     if codebook is None:
-        sampled = (
-            df.select(id_col, emb_col)
-            .orderBy(codebook_sample_order(id_col, seed))
-            .limit(sample_per_cell * n_cells)
-            .collect()
-        )
         codebook = lloyd_codebook(
-            [list(r[emb_col]) for r in sampled],
+            codebook_sample(df, id_col, emb_col, sample_per_cell * n_cells, seed),
             dim,
             n_cells,
             lloyd_iters,
@@ -1486,12 +1543,11 @@ def sq8_topk(
 
     Scale shape: training is a single global max-abs aggregate (one
     scalar crosses the driver); query codes ride the plan as an array
-    literal (the brute_force_topk broadcast-batch contract), so scoring
+    literal (the :func:`_fan_out` broadcast-batch contract), so scoring
     is a per-candidate ``transform`` + integer dot inside whole-stage
     codegen — no join, no shuffle, no Python until the final per-query
     top-k window. ``rerank=R`` adds the IVFADC+R-style exact stage
-    (Jégou et al. ICASSP'11): broadcast the nq*R shortlist, rescore with
-    the exact quantized integer inner product, keep ``topk``.
+    (:func:`_shortlist_topk`).
 
     Determinism: codes are half-up floors of two IEEE-exact double ops
     (:func:`sq8_codes`); both score passes are int64 sums (|code| <=
@@ -1500,7 +1556,7 @@ def sq8_topk(
     (catalog._sq8_oracle_sql mirrors the same expression order).
 
     Output: ``(query_id, neighbor_id, score double)`` in both modes
-    (the pq_topk schema contract): without rerank ``score`` is the
+    (the :func:`_shortlist_topk` contract): without rerank ``score`` is the
     integer code dot, with rerank the exact quantized inner product —
     both integral doubles, cast lossless.
     """
@@ -1517,61 +1573,14 @@ def sq8_topk(
     if not am:
         am = 1.0
 
-    # bounded-collect: the query batch (brute_force_topk contract)
-    qrows = (
-        queries.select(query_id, sq8_codes(F.col("q_emb"), am, levels).alias("qc"))
-        .collect()
-    )
-    qid_arr = F.array(*[F.lit(r[query_id]) for r in qrows])
-    qcode_arr = F.array(
-        *[F.array(*[F.lit(int(v)) for v in r["qc"]]) for r in qrows]
-    )
-
-    int_dot = lambda a, b: F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
     coded = candidates.withColumn("cc", sq8_codes(F.col("c_emb"), am, levels))
-    exploded = (
-        coded.withColumn(
-            "__adcs", F.transform(qcode_arr, lambda qc: int_dot(qc, F.col("cc")))
-        )
-        .select(cand_id, F.posexplode("__adcs").alias("__qi", "__adc"))
-        .select(
-            F.element_at(qid_arr, F.col("__qi") + 1).alias(query_id),
-            F.col(cand_id),
-            F.col("__adc"),
-        )
+    first = _fan_out(
+        queries, coded, query_id, cand_id,
+        sq8_codes(F.col("q_emb"), am, levels),
+        _per_query(lambda qc: _int_dot(qc, F.col("cc"))),
     )
-    w = W.partitionBy(query_id).orderBy(F.col("__adc").desc(), F.col(cand_id))
-    ranked = exploded.withColumn("rn", F.row_number().over(w))
-    if rerank and rerank <= topk:
-        # a positive rerank no bigger than topk is a no-op shortlist —
-        # silently returning un-reranked first-pass scores would mask a
-        # caller bug (ADVICE r6), so reject it loudly
-        raise ValueError(
-            f"rerank ({rerank}) must exceed topk ({topk}) to widen the "
-            "shortlist; pass rerank=0 to skip the exact rerank stage"
-        )
-    if not rerank:
-        return ranked.filter(F.col("rn") <= topk).select(
-            query_id, cand_id, F.col("__adc").cast("double").alias("score")
-        )
-    # broadcast the nq*R shortlist back against the corpus (candidates
-    # stay in place — no vector ever crosses the ranking shuffle)
-    shortlist = ranked.filter(F.col("rn") <= rerank).select(query_id, cand_id)
-    qz = lambda c: F.transform(c, lambda x: F.floor(x * rerank_scale))
-    paired = (
-        candidates.join(F.broadcast(shortlist), cand_id)
-        .join(F.broadcast(queries.select(query_id, "q_emb")), query_id)
-        .withColumn("ip", int_dot(qz(F.col("q_emb")), qz(F.col("c_emb"))))
-    )
-    w2 = W.partitionBy(query_id).orderBy(F.col("ip").desc(), F.col(cand_id))
-    return (
-        paired.withColumn("rn2", F.row_number().over(w2))
-        .filter(F.col("rn2") <= topk)
-        .select(query_id, cand_id, F.col("ip").cast("double").alias("score"))
+    return _shortlist_topk(
+        first, queries, candidates, query_id, cand_id, topk, rerank, rerank_scale
     )
 
 
@@ -1641,7 +1650,7 @@ def binary_topk(
 
     Scale shape: NO training at all (the sign needs no range, no
     codebook, no sample) so ingest never blocks on a fit; query codes
-    ride the plan as an array literal (the brute_force_topk broadcast-
+    ride the plan as an array literal (the :func:`_fan_out` broadcast-
     batch contract), candidates stay partitioned in place — no join, no
     shuffle, no Python until the final per-query top-k window, and the
     only bytes the first pass touches per candidate are dim/8.
@@ -1652,73 +1661,22 @@ def binary_topk(
     fold and both passes).
 
     Output: ``(query_id, neighbor_id, score double)`` in both modes (the
-    pq_topk/sq8_topk schema contract): without rerank ``score`` is the
+    :func:`_shortlist_topk` contract): without rerank ``score`` is the
     Hamming similarity ``dim - distance``, with rerank the exact
     quantized inner product — both integral doubles, cast lossless.
     """
-    # bounded-collect: the query batch (brute_force_topk contract)
-    qrows = (
-        queries.select(
-            query_id,
-            binary_codes(F.col("q_emb"), dim, word_bits).alias("qc"),
-        )
-        .collect()
-    )
-    qid_arr = F.array(*[F.lit(r[query_id]) for r in qrows])
-    qcode_arr = F.array(
-        *[F.array(*[F.lit(int(v)) for v in r["qc"]]) for r in qrows]
-    )
-
     coded = candidates.withColumn(
         "cc", binary_codes(F.col("c_emb"), dim, word_bits)
     )
-    exploded = (
-        coded.withColumn(
-            "__sims",
-            F.transform(
-                qcode_arr,
-                lambda qc: F.lit(dim).cast("bigint")
-                - hamming_words(qc, F.col("cc")),
-            ),
-        )
-        .select(cand_id, F.posexplode("__sims").alias("__qi", "__sim"))
-        .select(
-            F.element_at(qid_arr, F.col("__qi") + 1).alias(query_id),
-            F.col(cand_id),
-            F.col("__sim"),
-        )
+    first = _fan_out(
+        queries, coded, query_id, cand_id,
+        binary_codes(F.col("q_emb"), dim, word_bits),
+        _per_query(
+            lambda qc: F.lit(dim).cast("bigint") - hamming_words(qc, F.col("cc"))
+        ),
     )
-    w = W.partitionBy(query_id).orderBy(F.col("__sim").desc(), F.col(cand_id))
-    ranked = exploded.withColumn("rn", F.row_number().over(w))
-    if rerank and rerank <= topk:
-        # a positive rerank no bigger than topk is a no-op shortlist —
-        # silently returning un-reranked first-pass scores would mask a
-        # caller bug (ADVICE r6), so reject it loudly
-        raise ValueError(
-            f"rerank ({rerank}) must exceed topk ({topk}) to widen the "
-            "shortlist; pass rerank=0 to skip the exact rerank stage"
-        )
-    if not rerank:
-        return ranked.filter(F.col("rn") <= topk).select(
-            query_id, cand_id, F.col("__sim").cast("double").alias("score")
-        )
-    int_dot = lambda a, b: F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    qz = lambda c: F.transform(c, lambda x: F.floor(x * rerank_scale))
-    shortlist = ranked.filter(F.col("rn") <= rerank).select(query_id, cand_id)
-    paired = (
-        candidates.join(F.broadcast(shortlist), cand_id)
-        .join(F.broadcast(queries.select(query_id, "q_emb")), query_id)
-        .withColumn("ip", int_dot(qz(F.col("q_emb")), qz(F.col("c_emb"))))
-    )
-    w2 = W.partitionBy(query_id).orderBy(F.col("ip").desc(), F.col(cand_id))
-    return (
-        paired.withColumn("rn2", F.row_number().over(w2))
-        .filter(F.col("rn2") <= topk)
-        .select(query_id, cand_id, F.col("ip").cast("double").alias("score"))
+    return _shortlist_topk(
+        first, queries, candidates, query_id, cand_id, topk, rerank, rerank_scale
     )
 
 
@@ -1756,63 +1714,14 @@ def matryoshka_topk(
     without rerank ``score`` is the quantized prefix inner product, with
     rerank the quantized full-dimension inner product.
     """
-    int_dot = lambda a, b: F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    qz = lambda c: F.transform(c, lambda x: F.floor(x * scale))
-
-    # bounded-collect: the query batch (brute_force_topk contract)
-    qrows = (
-        queries.select(
-            query_id,
-            qz(F.slice(F.col("q_emb"), 1, prefix_dim)).alias("qp"),
-        )
-        .collect()
-    )
-    qid_arr = F.array(*[F.lit(r[query_id]) for r in qrows])
-    qpre_arr = F.array(
-        *[F.array(*[F.lit(int(v)) for v in r["qp"]]) for r in qrows]
-    )
-
     pre = candidates.withColumn(
-        "cp", qz(F.slice(F.col("c_emb"), 1, prefix_dim))
+        "cp", _quantized(F.slice(F.col("c_emb"), 1, prefix_dim), scale)
     )
-    exploded = (
-        pre.withColumn(
-            "__ips", F.transform(qpre_arr, lambda qp: int_dot(qp, F.col("cp")))
-        )
-        .select(cand_id, F.posexplode("__ips").alias("__qi", "__ip"))
-        .select(
-            F.element_at(qid_arr, F.col("__qi") + 1).alias(query_id),
-            F.col(cand_id),
-            F.col("__ip"),
-        )
+    first = _fan_out(
+        queries, pre, query_id, cand_id,
+        _quantized(F.slice(F.col("q_emb"), 1, prefix_dim), scale),
+        _per_query(lambda qp: _int_dot(qp, F.col("cp"))),
     )
-    w = W.partitionBy(query_id).orderBy(F.col("__ip").desc(), F.col(cand_id))
-    ranked = exploded.withColumn("rn", F.row_number().over(w))
-    if rerank and rerank <= topk:
-        # a positive rerank no bigger than topk is a no-op shortlist —
-        # silently returning un-reranked first-pass scores would mask a
-        # caller bug (ADVICE r6), so reject it loudly
-        raise ValueError(
-            f"rerank ({rerank}) must exceed topk ({topk}) to widen the "
-            "shortlist; pass rerank=0 to skip the exact rerank stage"
-        )
-    if not rerank:
-        return ranked.filter(F.col("rn") <= topk).select(
-            query_id, cand_id, F.col("__ip").cast("double").alias("score")
-        )
-    shortlist = ranked.filter(F.col("rn") <= rerank).select(query_id, cand_id)
-    paired = (
-        candidates.join(F.broadcast(shortlist), cand_id)
-        .join(F.broadcast(queries.select(query_id, "q_emb")), query_id)
-        .withColumn("ip", int_dot(qz(F.col("q_emb")), qz(F.col("c_emb"))))
-    )
-    w2 = W.partitionBy(query_id).orderBy(F.col("ip").desc(), F.col(cand_id))
-    return (
-        paired.withColumn("rn2", F.row_number().over(w2))
-        .filter(F.col("rn2") <= topk)
-        .select(query_id, cand_id, F.col("ip").cast("double").alias("score"))
+    return _shortlist_topk(
+        first, queries, candidates, query_id, cand_id, topk, rerank, scale
     )

@@ -51,8 +51,12 @@ def build_session(
       session per machine. Two sessions side by side can ask for more
       memory than the machine has — on a 15 GB machine two concurrent
       sessions (9216m each) ran it out of memory and the kernel's OOM
-      killer ended one driver JVM — so give each concurrent session a
-      smaller ``SPARK_DRIVER_MEMORY`` (e.g. ``4g``);
+      killer ended one driver JVM — so concurrent drivers (say a
+      ``tools/check_oracle.py`` sweep beside pytest) need
+      ``SPARK_DRIVER_MEMORY`` set so that their heaps together fit in
+      RAM with room to spare: each process also holds Python workers
+      and Arrow buffers beside its heap (of two 5g drivers on 15 GB, an
+      sf0.1 oracle check beside pytest, one was still killed);
     - generated classes stay compiled for the JVM's life: the codegen
       cache (``spark.sql.codegen.cache.maxEntries``, a static conf) holds
       4096 classes instead of Spark's 100, and class names carry no

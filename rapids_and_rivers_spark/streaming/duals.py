@@ -899,12 +899,12 @@ def minhash_index_foreach_batch(
     the historical corpus.
     """
     from rapids_and_rivers_spark.operators.dedup import (
-        jaccard,
+        band_hashes,
+        jaccard_verify,
         minhash_signature,
         shingled,
     )
 
-    rows_per_band = num_hashes // bands
     stores = _minhash_stores(index_dir, pairs_dir)
     band_store, shingle_store, pair_store = stores
 
@@ -916,27 +916,7 @@ def minhash_index_foreach_batch(
             .withColumn("sig", minhash_signature(F.col("shingles"), num_hashes))
             .persist()
         )
-        banded = base.filter(F.col("sig").isNotNull()).select(
-            "id",
-            F.explode_outer(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                *[
-                                    F.col("sig")[i]
-                                    for i in range(
-                                        b * rows_per_band, (b + 1) * rows_per_band
-                                    )
-                                ]
-                            ).alias("band_hash"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("id", "bb.band", "bb.band_hash")
+        banded = band_hashes(base, num_hashes, bands)
         # write new docs to the index FIRST so the candidate join sees
         # new-new pairs too (old-old pairs never recompute); per-epoch
         # subdir + overwrite = idempotent under epoch replay
@@ -961,28 +941,8 @@ def minhash_index_foreach_batch(
             )
             .dropDuplicates(["id_a", "id_b"])
         )
-        shingle_tbl = shingle_store.read(spark)
-        verified = (
-            cand.join(
-                shingle_tbl.select(
-                    F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")
-                ),
-                "id_a",
-            )
-            .join(
-                shingle_tbl.select(
-                    F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")
-                ),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.round(jaccard(F.col("sh_a"), F.col("sh_b")), ndigits).alias(
-                    "jaccard"
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
+        verified = jaccard_verify(
+            cand, shingle_store.read(spark), threshold, ndigits
         )
         pair_store.write(verified, epoch_id)
         base.unpersist()
@@ -2285,7 +2245,7 @@ def er_index_foreach_batch(
     "prune" read the whole store) and pinned in
     ``index_dir/buckets.json`` for the stream's lifetime.
     """
-    from rapids_and_rivers_spark.operators.dedup import jaccard, shingled
+    from rapids_and_rivers_spark.operators.dedup import jaccard_verify, shingled
     from rapids_and_rivers_spark.operators.fuzzy import (
         sorted_neighborhood_pairs,
     )
@@ -2398,21 +2358,8 @@ def er_index_foreach_batch(
         prior_sh = ssj_shingles.prior(spark, epoch_id)
         cur_sh = base.select("id", "shingles")
         sh = cur_sh if prior_sh is None else prior_sh.unionByName(cur_sh)
-        verified = (
-            cand.join(
-                sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")),
-                "id_a",
-            )
-            .join(
-                sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")),
-                "id_b",
-            )
-            .withColumn(
-                "jaccard",
-                F.round(jaccard(F.col("sh_a"), F.col("sh_b")), ndigits),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b")
+        verified = jaccard_verify(cand, sh, threshold, ndigits).select(
+            "id_a", "id_b"
         )
         # -- sorted-neighborhood channel ------------------------------
         touched = recs.select("blk").distinct()

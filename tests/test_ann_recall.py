@@ -635,6 +635,41 @@ def test_rerank_not_exceeding_topk_rejected(spark):
         S.pq_topk(q, c, dim=4, m=2, topk=5, rerank=4)
 
 
+def test_quantized_tiers_keep_input_id_types(spark):
+    """All four quantized tiers, with and without rerank, return
+    ``(query_id, neighbor_id, score)`` typed (the query frame's
+    query_id type, the candidate frame's neighbor_id type, double) —
+    whatever the id VALUES: bigint query ids below 2^31 once came back
+    as int, because the query batch rode the plan as Python literals."""
+    from rapids_and_rivers_spark.operators import similarity as S
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3) - 1.0, 1.0, 0.5 - i / 8.0, 0.25]) for i in range(8)],
+        "id long, embedding array<float>",
+    )
+    q = emb.limit(2).select(
+        F.col("id").alias("query_id"),
+        S.as_double_array(F.col("embedding")).alias("q_emb"),
+    )
+    c = emb.select(
+        F.col("id").cast("int").alias("neighbor_id"),
+        S.as_double_array(F.col("embedding")).alias("c_emb"),
+    )
+    want = [("query_id", "bigint"), ("neighbor_id", "int"), ("score", "double")]
+    for rerank in (0, 4):
+        tiers = {
+            "pq": S.pq_topk(q, c, dim=4, m=2, topk=2, rerank=rerank, corpus_n=8),
+            "sq8": S.sq8_topk(q, c, topk=2, rerank=rerank),
+            "binary": S.binary_topk(q, c, dim=4, word_bits=4, topk=2, rerank=rerank),
+            "matryoshka": S.matryoshka_topk(
+                q, c, prefix_dim=2, topk=2, rerank=rerank
+            ),
+        }
+        for name, out in tiers.items():
+            assert out.dtypes == want, (name, rerank, out.dtypes)
+            assert out.count() == 4, (name, rerank)
+
+
 def test_pq_under_bit_shape_warns_and_raises(spark):
     """The r8 sf1 measurement (ANN_RECALL_SF1.json: 12-bit codes
     collapse to 0.093 recall at 20k vectors) lives in the OPERATOR now:

@@ -519,6 +519,23 @@ def test_star_cc_matches_label_propagation(spark):
     assert all(c == 100 for (n, c) in star if 100 <= n <= 140)
 
 
+def test_duplicate_clusters_raises_when_not_converged(spark):
+    """Min-label propagation needs one round per unit of diameter: a
+    13-node path under max_iter=3 must raise, not come back as 10
+    unfinished clusters; with enough rounds it is one cluster."""
+    import pytest
+
+    from rapids_and_rivers_spark.operators.dedup import duplicate_clusters
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        duplicate_clusters(path, max_iter=3)
+    done = duplicate_clusters(path, max_iter=20).collect()
+    assert len(done) == 13 and {r.cluster for r in done} == {0}
+
+
 def test_minhash_signature_table_materialization_roundtrip(spark, tmp_path):
     """The documented 100 TB pattern executed: the (id, shingles, sig)
     base is MATERIALIZED to parquet once, and candidate banding + Jaccard

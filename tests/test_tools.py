@@ -22,6 +22,7 @@ import explain_audit  # noqa: E402
 import check_oracle  # noqa: E402
 import bench_compare  # noqa: E402
 import collect_audit  # noqa: E402
+import dump_plans  # noqa: E402
 
 
 # ---------------------------------------------------------------- plans
@@ -656,3 +657,39 @@ class TestCollectGrowthAudit:
         for c, bc, bp in before:
             assert c.__dict__.get("collect") is bc
             assert c.__dict__.get("toPandas") is bp
+
+
+def test_dump_plans_masks_session_counters():
+    """Two dumps of the same plan from different sessions differ only in
+    expression ids, lambda-variable suffixes, exchange plan ids and RDD
+    ids; all four are masked, and nothing else (column names that merely end in
+    digits, operator ids, literals) is touched."""
+    a = (
+        "(3) Project [codegen id : 1]\n"
+        "Output [2]: [query_id#12L, r_1#40]\n"
+        "Arguments: transform(qc#7, lambdafunction(aggregate(zip_with("
+        "lambda x_10#69, cc#8, lambdafunction((lambda x_11#71 * lambda "
+        "y_12#72), lambda x_11#71, lambda y_12#72, false)), 0, "
+        "lambdafunction((lambda acc_13#73L + lambda x_14#74L), lambda "
+        "acc_13#73L, lambda x_14#74L, false)), lambda x_10#69, false)), 127\n"
+        "Exchange hashpartitioning(query_id#12L, 4), ENSURE_REQUIREMENTS, "
+        "[plan_id=535]\n"
+        "Arguments: [u#9L], MapPartitionsRDD[667] at localCheckpoint"
+    )
+    b = (
+        a.replace("#12L", "#301L").replace("#40", "#355")
+        .replace("x_10#69", "x_98#410").replace("x_11#71", "x_99#411")
+        .replace("y_12#72", "y_100#412").replace("acc_13#73L", "acc_101#413L")
+        .replace("x_14#74L", "x_102#414L").replace("#7,", "#360,")
+        .replace("#8,", "#361,").replace("plan_id=535", "plan_id=1201").replace("#9L", "#44L")
+        .replace("RDD[667]", "RDD[664]")
+    )
+    assert a != b
+    assert dump_plans.mask_plan(a) == dump_plans.mask_plan(b)
+    masked = dump_plans.mask_plan(a)
+    assert "#N" in masked and "#1" not in masked and "#7" not in masked
+    assert "lambda x_N#N" in masked and "lambda acc_N#N" in masked
+    assert "plan_id=N" in masked and "MapPartitionsRDD[N]" in masked
+    # not session counters: left alone
+    assert "r_1#N" in masked and "(3) Project [codegen id : 1]" in masked
+    assert ", 127" in masked and ", 4)" in masked
