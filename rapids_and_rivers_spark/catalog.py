@@ -4028,15 +4028,9 @@ def label_noise_probe(spark, sf_dir):
 )
 def sim_ann_ivf(spark, sf_dir):
     _, queries, candidates = _ann_inputs(spark, sf_dir)
-    sampled = (
-        candidates.select("neighbor_id", "c_emb")
-        .orderBy(S.codebook_sample_order("neighbor_id", seed=13))
-        .limit(512)
-        .collect()
-    )
     codebook = S.lloyd_codebook(
-        [list(r["c_emb"]) for r in sampled], 64, 16, iters=8, seed=13,
-        quantize=1024,
+        S.codebook_sample(candidates, "neighbor_id", "c_emb", 512, seed=13),
+        64, 16, iters=8, seed=13, quantize=1024,
     )
     return S.ivf_topk(
         queries, candidates, dim=64, k=5, n_cells=16, nprobe=4,
@@ -4405,30 +4399,14 @@ def _semdedup_codebook(spark, sf_dir):
     resolves to the static oracles' 16 at every artifact-hashed scale
     by the sizing rule — pinned by
     test_adaptive_cell_count_oracle_scales."""
-    from rapids_and_rivers_spark.operators.similarity import (
-        codebook_sample_order,
-        lloyd_codebook,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = _semdedup_emb(spark, sf_dir)
     key = ";".join(sorted(str(f) for f in emb.inputFiles()))
     cb = _SEMDEDUP_CB_CACHE.get(key)
     if cb is None:
-        # cell-count sizing: one global count() aggregate — not a
-        # DataFrame.collect, so it carries no bounded-collect marker
-        # (the growth audit attributes the FIRST marker in its window
-        # to the sample collect below, which is codebook-class)
         n_cells = D.adaptive_cell_count(emb.count())
-        # bounded-collect: 32 * n_cells codebook-sample rows (KB-scale,
-        # the build_codebook_table class)
-        sampled = (
-            emb.select("vec_id", S.as_double_array(F.col("embedding")).alias("e"))
-            .orderBy(codebook_sample_order("vec_id", 13))
-            .limit(32 * n_cells)
-            .collect()
-        )
-        cb = lloyd_codebook(
-            [list(r["e"]) for r in sampled], 64, n_cells, 8, 13, quantize=1024
+        cb = S.lloyd_codebook(
+            S.codebook_sample(emb, "vec_id", "embedding", 32 * n_cells, 13),
+            64, n_cells, 8, 13, quantize=1024,
         )
         if key:
             _SEMDEDUP_CB_CACHE[key] = cb

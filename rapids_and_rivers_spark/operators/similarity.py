@@ -842,6 +842,18 @@ def _per_query(pair_score):
     return scores
 
 
+def _check_rerank(topk: int, rerank: int) -> None:
+    """Reject a positive ``rerank`` no bigger than ``topk``: a no-op
+    shortlist that would silently return un-reranked first-pass scores
+    and mask a caller bug (ADVICE r6). Every quantized tier calls this
+    first, before any Spark action."""
+    if rerank and rerank <= topk:
+        raise ValueError(
+            f"rerank ({rerank}) must exceed topk ({topk}) to widen the "
+            "shortlist; pass rerank=0 to skip the exact rerank stage"
+        )
+
+
 def _shortlist_topk(
     first: DataFrame,
     queries: DataFrame,
@@ -868,14 +880,6 @@ def _shortlist_topk(
     inner product ``sum floor(q_i*s)*floor(c_i*s)`` with
     ``s = rerank_scale``. The products keep it integral and < 2^53, so
     the double score is lossless and bit-stable in any engine."""
-    if rerank and rerank <= topk:
-        # a positive rerank no bigger than topk is a no-op shortlist —
-        # silently returning un-reranked first-pass scores would mask a
-        # caller bug (ADVICE r6), so reject it loudly
-        raise ValueError(
-            f"rerank ({rerank}) must exceed topk ({topk}) to widen the "
-            "shortlist; pass rerank=0 to skip the exact rerank stage"
-        )
     first_score = F.col("__score")
     w = W.partitionBy(query_id).orderBy(
         (first_score if order is None else order).desc(), F.col(cand_id)
@@ -956,6 +960,7 @@ def pq_topk(
     (:func:`_shortlist_topk`), which keeps the full value oracle while
     recall@topk rises to the ADC's recall@R.
     """
+    _check_rerank(topk, rerank)
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -1560,6 +1565,7 @@ def sq8_topk(
     integer code dot, with rerank the exact quantized inner product —
     both integral doubles, cast lossless.
     """
+    _check_rerank(topk, rerank)
     # bounded-collect: one global scalar (the trained SQ range)
     am = candidates.agg(
         F.max(
@@ -1665,6 +1671,7 @@ def binary_topk(
     Hamming similarity ``dim - distance``, with rerank the exact
     quantized inner product — both integral doubles, cast lossless.
     """
+    _check_rerank(topk, rerank)
     coded = candidates.withColumn(
         "cc", binary_codes(F.col("c_emb"), dim, word_bits)
     )
@@ -1714,6 +1721,7 @@ def matryoshka_topk(
     without rerank ``score`` is the quantized prefix inner product, with
     rerank the quantized full-dimension inner product.
     """
+    _check_rerank(topk, rerank)
     pre = candidates.withColumn(
         "cp", _quantized(F.slice(F.col("c_emb"), 1, prefix_dim), scale)
     )

@@ -8,6 +8,7 @@ each operator module.
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
@@ -28,6 +29,17 @@ def _default_driver_memory() -> str:
     and the OS. On a cluster, executors size storage separately."""
     ram_mb = (os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")) >> 20
     return f"{min(24 * 1024, int(ram_mb * 0.6))}m"
+
+
+def _worker_imports_engine() -> bool:
+    """Whether a local Python worker can import this package: it is
+    installed, or its directory is on ``PYTHONPATH`` or is the working
+    directory (``python -m`` puts the worker's, inherited from this
+    process, first on its path)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    paths += site.getsitepackages()
+    return any(p and os.path.abspath(p) == root for p in paths)
 
 
 def build_session(
@@ -85,7 +97,14 @@ def build_session(
       which 4096 still holds. Metaspace after three sequences was 169 MB
       with 100 entries and 164 MB with 4096 (recompiled copies cost more
       than kept ones); near the end of the sweep it was ~195 MB with 100
-      and 218 MB with 4096.
+      and 218 MB with 4096;
+    - Python tasks run under the engine's worker daemon
+      (``spark.python.daemon.module``, :mod:`rapids_and_rivers_spark.executor`),
+      which drops the worker's pyspark.zip finders before each task, so
+      a task no longer re-reads the zip's directory once per finder.
+      It is set only when a local Python worker can import this package
+      (:func:`_worker_imports_engine`); otherwise the daemon could not
+      start and every Python task would fail.
 
     ``extra_conf`` overrides any of these defaults.
     """
@@ -126,6 +145,10 @@ def build_session(
         .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.codegen.useIdInClassName", "false")
     )
+    if _worker_imports_engine():
+        builder = builder.config(
+            "spark.python.daemon.module", "rapids_and_rivers_spark.executor"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -27,7 +27,10 @@ Handler execution model:
                           :class:`Packet` with a collecting publish
                           context. The stage is sized by rows
                           (``ROWS_PER_BRANCH_TASK``), since every Python
-                          task pays a fixed start-up cost. No driver-side
+                          task pays a fixed start-up cost (~0.03-0.04
+                          worker CPU-s under the engine's worker daemon,
+                          :mod:`rapids_and_rivers_spark.executor`;
+                          0.16-0.18 s without it). No driver-side
                           collect of message payloads.
 """
 
@@ -136,6 +139,12 @@ def run_packet_stage(
 
     The record-scope MDC (KafkaRapid.kt:160-161) wraps one record's
     dispatch through all of its rivers, as the reference's does.
+
+    The stage runs once per trigger, so its task's fixed cost is paid on
+    every trigger. The engine's worker daemon
+    (:mod:`rapids_and_rivers_spark.executor`, set by ``build_session``)
+    keeps that cost at ~0.03-0.04 worker CPU-s instead of 0.16-0.18 s
+    (``ROWS_PER_BRANCH_TASK`` has the measurement).
     """
     specs = []
     for river in rivers:
@@ -382,12 +391,17 @@ class StreamingRapid(AbstractRapid):
     #: branches x this many rows coalesce the cached parse so branch
     #: scans aren't scheduler-bound (AQE can't do this inside a
     #: streaming batch), and the packet stage runs ceil(rows / this)
-    #: tasks. A Python task costs ~0.25-0.35 CPU-s whatever its rows
-    #: (identity mapInPandas on 4 cores: 50 rows 0.25 s, 20k rows 0.28 s,
-    #: 600 rows over 12 tasks 3.7 s): each task starts with the worker's
-    #: setup_spark_files -> importlib.invalidate_caches(), and each of
-    #: the ~16 zipimporters over pyspark.zip (one per imported
-    #: subpackage) re-reads the whole zip directory.
+    #: tasks. A Python task still has a fixed cost whatever its rows.
+    #: One-partition mapInPandas jobs on 4 cores (15 GB, local[4]) under
+    #: the engine's worker daemon, median worker CPU per task / job
+    #: wall: 50 rows 0.03 / 0.13 s, 20k rows 0.03-0.04 / 0.10-0.11 s;
+    #: 600 rows over 12 tasks 0.36-0.48 CPU-s / 0.30-0.33 s. Under
+    #: PySpark's own daemon the same jobs took 0.16-0.18 CPU-s per task
+    #: and 0.19-0.27 s, and 1.9-2.1 CPU-s / 0.68-0.70 s over 12 tasks:
+    #: every task's importlib.invalidate_caches() (PySpark's
+    #: setup_spark_files) re-read the pyspark.zip directory once per zip
+    #: finder, ~16 per worker; the engine's daemon drops those finders
+    #: before each task (rapids_and_rivers_spark.executor).
     ROWS_PER_BRANCH_TASK = 20_000
 
     def _process_batch_inner(self, batch_df: DataFrame, batch_id: int) -> None:

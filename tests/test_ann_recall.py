@@ -608,10 +608,14 @@ def test_hamming_words(spark):
 def test_rerank_not_exceeding_topk_rejected(spark):
     """ADVICE r6: a positive rerank <= topk is a no-op shortlist that
     silently returned un-reranked scores — all four quantized tiers must
-    reject it loudly."""
+    reject it loudly, and before any Spark action: a bad ``pq_topk``
+    call once ran the corpus count, the codebook-sample collect and the
+    query collect first."""
     import pytest
 
     from rapids_and_rivers_spark.operators import similarity as S
+
+    sc = spark.sparkContext
 
     emb = spark.createDataFrame(
         [(i, [float(i % 3), 1.0, 0.5, 0.25]) for i in range(8)],
@@ -625,14 +629,22 @@ def test_rerank_not_exceeding_topk_rejected(spark):
         F.col("id").alias("neighbor_id"),
         S.as_double_array(F.col("embedding")).alias("c_emb"),
     )
-    with pytest.raises(ValueError, match="rerank"):
-        S.sq8_topk(q, c, topk=5, rerank=5)
-    with pytest.raises(ValueError, match="rerank"):
-        S.binary_topk(q, c, dim=4, word_bits=4, topk=5, rerank=3)
-    with pytest.raises(ValueError, match="rerank"):
-        S.matryoshka_topk(q, c, prefix_dim=2, topk=5, rerank=5)
-    with pytest.raises(ValueError, match="rerank"):
-        S.pq_topk(q, c, dim=4, m=2, topk=5, rerank=4)
+    calls = {
+        "sq8": lambda: S.sq8_topk(q, c, topk=5, rerank=5),
+        "binary": lambda: S.binary_topk(q, c, dim=4, word_bits=4, topk=5, rerank=3),
+        "matryoshka": lambda: S.matryoshka_topk(q, c, prefix_dim=2, topk=5, rerank=5),
+        "pq": lambda: S.pq_topk(q, c, dim=4, m=2, topk=5, rerank=4),
+    }
+    for tier, call in calls.items():
+        group = f"rerank-reject-{tier}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError, match="rerank"):
+                call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], tier
 
 
 def test_quantized_tiers_keep_input_id_types(spark):

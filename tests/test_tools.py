@@ -693,3 +693,27 @@ def test_dump_plans_masks_session_counters():
     # not session counters: left alone
     assert "r_1#N" in masked and "(3) Project [codegen id : 1]" in masked
     assert ", 127" in masked and ", 4)" in masked
+
+
+def test_dump_plans_masks_stream_state_dirs():
+    """The stream queries' store dirs get fresh ``tempfile.mkdtemp``
+    names in every process (``catalog._state_root`` / ``_state_dir``);
+    masked, two runs' locations match, and the query's own name and the
+    path below the store dir stay."""
+    a = (
+        "Location: InMemoryFileIndex [file:/tmp/rars_stream_k3x_9a0q/ivf_0b7zt1qe/"
+        "index/v1, file:/tmp/rars_stream_k3x_9a0q/semdedup_c_a_bcdefg]"
+    )
+    b = a.replace("k3x_9a0q", "zz8wq_1m").replace("0b7zt1qe", "q__1aa0z").replace(
+        "a_bcdefg", "7hk2pq0r"
+    )
+    assert a != b
+    masked = dump_plans.mask_plan(a)
+    assert masked == dump_plans.mask_plan(b)
+    assert masked == (
+        "Location: InMemoryFileIndex [file:/tmp/rars_stream_N/ivf_N/index/v1, "
+        "file:/tmp/rars_stream_N/semdedup_c_N]"
+    )
+    # a committed table's path is no per-process dir: left alone
+    plain = "Location: InMemoryFileIndex [file:/data/sf0.01/events_20260101]"
+    assert dump_plans.mask_plan(plain) == plain

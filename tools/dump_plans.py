@@ -9,8 +9,10 @@ Writes <out_dir>/<query>_<suffix>.txt for each query. `suffix` is
 Plans are written masked (:func:`mask_plan`): expression ids, the fresh
 suffixes of lambda variables, exchange plan ids and the RDD ids of
 checkpointed inputs are session counters, so they shift whenever an
-earlier query or expression changes. With them masked, a `diff` of two
-trees' dumps shows only real plan changes.
+earlier query or expression changes; the stream queries' store dirs
+(``catalog._state_root`` / ``_state_dir``) get fresh random names in
+every process. With them masked, a `diff` of two trees' dumps shows
+only real plan changes.
 """
 
 from __future__ import annotations
@@ -24,13 +26,18 @@ _EXPR_ID = re.compile(r"#\d+")
 _LAMBDA_SUFFIX = re.compile(r"\b(lambda \w+?)_\d+\b")
 _PLAN_ID = re.compile(r"\bplan_id=\d+")
 _RDD_ID = re.compile(r"RDD\[\d+\]")
+# tempfile.mkdtemp names: the prefix, then 8 characters of [a-z0-9_]
+_STATE_DIR = re.compile(r"\b(rars_stream_)[a-z0-9_]{8}/(\w+?_)[a-z0-9_]{8}(?!\w)")
 
 
 def mask_plan(plan: str) -> str:
     """``plan`` with every expression id (``#123`` -> ``#N``), lambda
     variable suffix (``lambda x_12`` -> ``lambda x_N``), exchange plan
-    id (``plan_id=7`` -> ``plan_id=N``) and RDD id
-    (``MapPartitionsRDD[667]`` -> ``MapPartitionsRDD[N]``) masked."""
+    id (``plan_id=7`` -> ``plan_id=N``), RDD id
+    (``MapPartitionsRDD[667]`` -> ``MapPartitionsRDD[N]``) and stream
+    store dir (``rars_stream_k3x_9a0q/ivf_0b7zt1qe`` ->
+    ``rars_stream_N/ivf_N``) masked."""
+    plan = _STATE_DIR.sub(r"\1N/\2N", plan)
     plan = _LAMBDA_SUFFIX.sub(r"\1_N", plan)
     plan = _EXPR_ID.sub("#N", plan)
     plan = _RDD_ID.sub("RDD[N]", plan)
