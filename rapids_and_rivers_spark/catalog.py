@@ -10461,7 +10461,11 @@ def unigram_encode_counts(spark, sf_dir):
     words = (
         doc_words.groupBy("word").agg(F.count(F.lit(1)).alias("n")).persist()
     )
-    vocab = T.unigram_vocab(words, top_v=48, max_len=4)
+    # bounded-collect: the trained vocabulary (all corpus chars + the
+    # top_v multi-char pieces), KB-scale by construction
+    vocab = (
+        T.unigram_vocab(words, top_v=48, max_len=4).select("piece", "cnt").collect()
+    )
     seg = T.unigram_viterbi(words, vocab)
     return (
         doc_words.join(seg.select("word", "pieces"), "word")
@@ -10780,7 +10784,10 @@ def wordpiece_encode_counts(spark, sf_dir):
     words = (
         doc_words.groupBy("word").agg(F.count(F.lit(1)).alias("n")).persist()
     )
-    vocab = T.wordpiece_vocab(words, top_v=32, max_len=4)
+    # bounded-collect: corpus chars (both roles) + 2 x top_v pieces
+    vocab = (
+        T.wordpiece_vocab(words, top_v=32, max_len=4).select("piece", "cont").collect()
+    )
     seg = T.wordpiece_greedy(words, vocab)
     return (
         doc_words.join(seg.select("word", "toks"), "word")

@@ -513,7 +513,8 @@ def unigram_vocab(words, top_v: int = 48, max_len: int = 4):
 
 
 def unigram_viterbi(words, vocab):
-    """Optimal segmentation of every distinct word under the vocabulary:
+    """Optimal segmentation of every distinct word under the vocabulary
+    ``vocab``, driver-side ``(piece, cnt)`` rows:
     minimize (piece count, -sum of piece frequencies, path) — an
     integer-exact Viterbi objective (min tokens, frequency tie-break,
     lexicographic final tie-break) chosen so the DP is bit-reproducible
@@ -522,7 +523,9 @@ def unigram_viterbi(words, vocab):
 
     Execution (guide §4.2, the lsh_bucket_multi pattern): the
     vocabulary is a bounded driver-side collect (|chars| + top_v rows —
-    the codebook-collect class), and the whole DP runs as ONE
+    the codebook-collect class) the caller makes once, so a streaming
+    dual with a frozen vocabulary runs no vocabulary job per epoch, and
+    the whole DP runs as ONE
     Arrow-batched kernel over the distinct-word table — no span
     explode, no join, no interpreted higher-order aggregate. The
     kernel is semantics-identical to the retained Catalyst reference
@@ -541,10 +544,7 @@ def unigram_viterbi(words, vocab):
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
-    # bounded-collect: the trained vocabulary (all corpus chars + the
-    # top_v multi-char pieces), KB-scale by construction
-    rows = vocab.select("piece", "cnt").collect()
-    vmap = {r["piece"]: int(r["cnt"]) for r in rows}
+    vmap = {p: int(c) for p, c in vocab}
     NS = (None, None, None)  # the null-fields candidate (see docstring)
 
     def _key(c):
@@ -565,6 +565,9 @@ def unigram_viterbi(words, vocab):
             dp: list = [(0, 0, "")]  # dp[0] = the zero accumulator
             for i in range(1, n + 1):
                 cands = []
+                # pieces longer than 4 are never matched, as in
+                # unigram_viterbi_expr: a cap taken from the vocabulary
+                # would segment differently from the reference
                 for piece_len in range(1, min(4, i) + 1):
                     cnt = vmap.get(w[i - piece_len : i])
                     if cnt is None:
@@ -794,8 +797,9 @@ def wordpiece_greedy(words, vocab, max_len: int = 4):
     exact-integer-aggregates-for-cross-engine-compares).
 
     Execution (guide §4.2, the unigram_viterbi pattern): the
-    position-aware vocabulary is a bounded driver-side collect and the
-    greedy walk runs as ONE Arrow-batched kernel over the distinct-word
+    position-aware vocabulary ``vocab`` is driver-side ``(piece, cont)``
+    rows, a bounded collect the caller makes once, and the greedy walk
+    runs as ONE Arrow-batched kernel over the distinct-word
     table — no span explode, no join, no interpreted higher-order
     aggregate. Semantics-identical to the retained Catalyst reference
     (:func:`wordpiece_greedy_expr`), including the LEFT-join contract:
@@ -810,11 +814,7 @@ def wordpiece_greedy(words, vocab, max_len: int = 4):
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
-    # bounded-collect: corpus chars (both roles) + 2 x top_v pieces
-    vset = {
-        (r["piece"], bool(r["cont"]))
-        for r in vocab.select("piece", "cont").collect()
-    }
+    vset = {(p, bool(c)) for p, c in vocab}
     _max_len = int(max_len)
 
     @pandas_udf("toks int, path string, ok boolean")

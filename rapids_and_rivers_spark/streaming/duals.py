@@ -3207,18 +3207,16 @@ def unigram_encode_foreach_batch(
     fixed (piece, cnt) table.
 
     Segmentation is stateless given the vocabulary, so per micro-batch
-    only the batch's DISTINCT words pay the span-join + higher-order-
-    aggregate DP (operators/text.py unigram_viterbi — the identical
-    integer-exact (pieces, -freq-mass, path) objective the batch query
-    and its DuckDB oracle use); the rest is :func:`_encode_stage`.
+    only the batch's DISTINCT words pay the Arrow-kernel DP
+    (operators/text.py unigram_viterbi — the identical integer-exact
+    (pieces, -freq-mass, path) objective the batch query and its DuckDB
+    oracle use), against ``vocab_rows`` as they are: no epoch runs a job
+    for the vocabulary. The rest is :func:`_encode_stage`.
     """
     from rapids_and_rivers_spark.operators import text as T
 
     def segment(words: DataFrame) -> DataFrame:
-        vocab = words.sparkSession.createDataFrame(
-            [(p, int(c)) for p, c in vocab_rows], "piece string, cnt long"
-        )
-        return T.unigram_viterbi(words, vocab).select(
+        return T.unigram_viterbi(words, vocab_rows).select(
             "word", F.col("pieces").alias("word_tokens")
         )
 
@@ -3241,18 +3239,16 @@ def wordpiece_encode_foreach_batch(
     table.
 
     Segmentation is stateless given the vocabulary, so per micro-batch
-    only the batch's DISTINCT words pay the span-join + higher-order-
-    aggregate greedy walk (operators/text.py wordpiece_greedy — the
-    identical deterministic longest-match objective the batch query and
-    its DuckDB oracle use); the rest is :func:`_encode_stage`.
+    only the batch's DISTINCT words pay the Arrow-kernel greedy walk
+    (operators/text.py wordpiece_greedy — the identical deterministic
+    longest-match objective the batch query and its DuckDB oracle use),
+    against ``vocab_rows`` as they are: no epoch runs a job for the
+    vocabulary. The rest is :func:`_encode_stage`.
     """
     from rapids_and_rivers_spark.operators import text as T
 
     def segment(words: DataFrame) -> DataFrame:
-        vocab = words.sparkSession.createDataFrame(
-            [(p, bool(c)) for p, c in vocab_rows], "piece string, cont boolean"
-        )
-        return T.wordpiece_greedy(words, vocab).select(
+        return T.wordpiece_greedy(words, vocab_rows).select(
             "word", F.col("toks").alias("word_tokens")
         )
 

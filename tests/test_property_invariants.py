@@ -388,12 +388,9 @@ def test_unigram_viterbi_equals_bruteforce(spark, words, counts):
     wdf = spark.createDataFrame(
         [(w, 1) for w in sorted(set(words))], "word string, n long"
     )
-    vdf = spark.createDataFrame(
-        vocab, "piece string, plen int, cnt long"
-    )
     got = {
         r["word"]: (r["pieces"], r["negsum"], r["path"])
-        for r in T.unigram_viterbi(wdf, vdf).collect()
+        for r in T.unigram_viterbi(wdf, [(p, c) for p, _, c in vocab]).collect()
     }
 
     def segs(w):
@@ -438,10 +435,9 @@ def test_wordpiece_greedy_equals_bruteforce(spark, words, start_ab, cont_ba):
     wdf = spark.createDataFrame(
         [(w, 1) for w in sorted(set(words))], "word string, n long"
     )
-    vdf = spark.createDataFrame(vocab, "piece string, cont boolean")
     got = {
         r["word"]: (r["toks"], r["path"], r["ok"])
-        for r in T.wordpiece_greedy(wdf, vdf).collect()
+        for r in T.wordpiece_greedy(wdf, vocab).collect()
     }
 
     def ref(w):
@@ -469,11 +465,9 @@ def test_wordpiece_greedy_dead_end_marks_unk(spark):
 
     wdf = spark.createDataFrame([("ba", 1), ("ab", 1)], "word string, n long")
     # 'b' can START a word but nothing can CONTINUE past position 1
-    vdf = spark.createDataFrame(
-        [("a", False), ("b", False)], "piece string, cont boolean"
-    )
+    vocab = [("a", False), ("b", False)]
     got = {r["word"]: (r["toks"], r["path"], r["ok"])
-           for r in T.wordpiece_greedy(wdf, vdf).collect()}
+           for r in T.wordpiece_greedy(wdf, vocab).collect()}
     assert got["ba"] == (1, "b", False)
     assert got["ab"] == (1, "a", False)
 
@@ -486,11 +480,9 @@ def test_wordpiece_greedy_keeps_fully_unmatched_words(spark):
     from rapids_and_rivers_spark.operators import text as T
 
     wdf = spark.createDataFrame([("zz", 1), ("ab", 1)], "word string, n long")
-    vdf = spark.createDataFrame(
-        [("a", False), ("b", True)], "piece string, cont boolean"
-    )
+    vocab = [("a", False), ("b", True)]
     got = {r["word"]: (r["toks"], r["path"], r["ok"])
-           for r in T.wordpiece_greedy(wdf, vdf).collect()}
+           for r in T.wordpiece_greedy(wdf, vocab).collect()}
     assert got["zz"] == (0, "", False)
     assert got["ab"] == (2, "a|##b", True)
 
@@ -526,7 +518,7 @@ def test_unigram_viterbi_kernel_matches_expr(spark, words):
     vdf = spark.createDataFrame(vocab, "piece string, cnt long")
     kern = {
         r["word"]: (r["pieces"], r["negsum"], r["path"])
-        for r in T.unigram_viterbi(wdf, vdf).collect()
+        for r in T.unigram_viterbi(wdf, vocab).collect()
     }
     ref = {
         r["word"]: (r["pieces"], r["negsum"], r["path"])
@@ -547,12 +539,10 @@ def test_unigram_viterbi_kernel_unreachable_and_drop_contract(spark):
     wdf = spark.createDataFrame(
         [("az", 1), ("zz", 1), ("ab", 1)], "word string, n long"
     )
-    vdf = spark.createDataFrame(
-        [("a", 3), ("b", 5), ("ab", 11)], "piece string, cnt long"
-    )
+    vocab = [("a", 3), ("b", 5), ("ab", 11)]
     got = {
         r["word"]: (r["pieces"], r["negsum"], r["path"])
-        for r in T.unigram_viterbi(wdf, vdf).collect()
+        for r in T.unigram_viterbi(wdf, vocab).collect()
     }
     assert got["az"] == (None, None, None)  # reachable start, dead end
     assert "zz" not in got                  # zero spans: row dropped
@@ -575,7 +565,7 @@ def test_wordpiece_greedy_kernel_matches_expr(spark, words):
     vdf = spark.createDataFrame(vocab, "piece string, cont boolean")
     kern = {
         r["word"]: (r["toks"], r["path"], r["ok"])
-        for r in T.wordpiece_greedy(wdf, vdf).collect()
+        for r in T.wordpiece_greedy(wdf, vocab).collect()
     }
     ref = {
         r["word"]: (r["toks"], r["path"], r["ok"])

@@ -2959,6 +2959,50 @@ def test_wordpiece_encode_stream_matches_batch_trained_vocab(spark, tmp_path):
     assert as_map(read_epoch_table(spark, out_dir)) == expected
 
 
+def test_encode_epochs_run_no_vocabulary_job(spark, tmp_path):
+    """The frozen-vocabulary encode duals segment against their driver-side
+    vocabulary rows as they are: an epoch runs exactly the jobs of the
+    same stage body with a segmentation that needs no vocabulary. Each
+    epoch used to turn the rows into a DataFrame that the kernel then
+    collected back, one job more per epoch."""
+    from rapids_and_rivers_spark.sources import load_table
+    from rapids_and_rivers_spark.streaming import duals as D
+
+    sc = spark.sparkContext
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
+        "doc_id", "text"
+    )
+    chars = "abcdefghijklmnopqrstuvwxyz0123456789"
+
+    def no_vocab(words):
+        return words.select("word", F.length("word").alias("word_tokens"))
+
+    stages = {
+        "plain": D._encode_stage(
+            str(tmp_path / "plain"), "text", "doc_id", no_vocab, alnum_only=True
+        ),
+        "unigram": D.unigram_encode_foreach_batch(
+            [(c, 1) for c in chars], str(tmp_path / "uni")
+        ),
+        "wordpiece": D.wordpiece_encode_foreach_batch(
+            [(c, cont) for c in chars for cont in (False, True)],
+            str(tmp_path / "wp"),
+        ),
+    }
+    jobs = {}
+    for name, stage in stages.items():
+        group = f"encode_epoch_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            stage(docs, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["plain"] > 0
+    assert jobs == dict.fromkeys(stages, jobs["plain"])
+
+
 def test_phash_signatures_runs_unchanged_on_stream(spark, tmp_path):
     """Image pHash is pure mapInPandas — the SAME function runs on a
     streaming DataFrame (the image path's batch/stream duality, like

@@ -220,18 +220,15 @@ def test_unigram_viterbi_optimal_segmentation(spark):
     words = spark.createDataFrame(
         [("abcb", 5), ("abab", 3), ("z", 1)], "word string, n long"
     )
-    vocab = spark.createDataFrame(
-        [
-            ("a", 1, 100),
-            ("b", 1, 90),
-            ("c", 1, 80),
-            ("z", 1, 1),
-            ("ab", 2, 60),
-            ("bc", 2, 70),
-            ("abc", 3, 40),
-        ],
-        "piece string, plen int, cnt long",
-    )
+    vocab = [
+        ("a", 100),
+        ("b", 90),
+        ("c", 80),
+        ("z", 1),
+        ("ab", 60),
+        ("bc", 70),
+        ("abc", 40),
+    ]
     seg = {r["word"]: r for r in T.unigram_viterbi(words, vocab).collect()}
     assert seg["abcb"]["pieces"] == 2
     assert seg["abcb"]["path"] == "abc|b"  # 2 pieces beats a|bc|b etc.

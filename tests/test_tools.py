@@ -23,6 +23,7 @@ import check_oracle  # noqa: E402
 import bench_compare  # noqa: E402
 import collect_audit  # noqa: E402
 import dump_plans  # noqa: E402
+import profile_query  # noqa: E402
 
 
 # ---------------------------------------------------------------- plans
@@ -717,3 +718,21 @@ def test_dump_plans_masks_stream_state_dirs():
     # a committed table's path is no per-process dir: left alone
     plain = "Location: InMemoryFileIndex [file:/data/sf0.01/events_20260101]"
     assert dump_plans.mask_plan(plain) == plain
+
+
+def test_profile_query_reports_the_code_cache_pools(spark):
+    """``profile_query`` reads the JVM's code-cache pools (one
+    ``CodeCache``, or its ``CodeHeap`` segments), each with used <= peak
+    <= max, and together they hold the whole reserved cache."""
+    pools = profile_query._code_cache(spark)
+    names = [p[0] for p in pools]
+    assert names == ["CodeCache"] or (
+        names and all(n.startswith("CodeHeap '") for n in names)
+    )
+    assert all(0 < used <= peak <= cap for _, used, peak, cap in pools)
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    reserved = int(bean.getVMOption("ReservedCodeCacheSize").getValue())
+    assert round(sum(p[3] for p in pools)) == reserved >> 20

@@ -10,7 +10,9 @@ Next to each query's job list it prints how many classes Spark's code
 generator compiled for it and the time that took (Spark's
 ``CodegenMetrics`` compile count and ``CodeGenerator.compileTime``), so
 a generated-class cache too small for the working set shows up as
-recompiles of a query that already ran.
+recompiles of a query that already ran. Beside it go the JVM's
+code-cache pools (used, peak and max MB), so a full code cache, after
+which the JIT stops compiling, shows without reading the JVM's stdout.
 
 Usage: python tools/profile_query.py [sf_dir] query [query ...]
 """
@@ -40,6 +42,21 @@ def _codegen(spark) -> tuple[int, float]:
     count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
     return count.getCount(), ns / 1e9
+
+
+def _code_cache(spark) -> list[tuple[str, float, float, float]]:
+    """(pool, used MB, peak MB, max MB) of each of the JVM's code-cache
+    pools: ``CodeCache``, or the ``CodeHeap '…'`` segments when the cache
+    is segmented."""
+    jvm = spark.sparkContext._jvm
+    pools = []
+    for pool in jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans():
+        name = pool.getName()
+        if name == "CodeCache" or name.startswith("CodeHeap"):
+            usage, peak = pool.getUsage(), pool.getPeakUsage()
+            mb = (usage.getUsed(), peak.getUsed(), usage.getMax())
+            pools.append((name, *(b / (1 << 20) for b in mb)))
+    return pools
 
 
 def main() -> None:
@@ -103,6 +120,8 @@ def main() -> None:
             f"  generated classes compiled: {compiled1 - compiled0} "
             f"in {compile_s1 - compile_s0:.2f}s"
         )
+        for pool, used, peak, cap in _code_cache(spark):
+            print(f"  {pool}: used {used:.1f} MB, peak {peak:.1f} MB, max {cap:.1f} MB")
         # top stages by executorRunTime for the biggest jobs
         stages = _api(base, "/stages?status=complete")
         new_stage_ids = {s for j in jobs for s in j["stageIds"]}
